@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main. Writes each catalog query to the `noop`
   * sink so the FULL plan executes (a bare `.count()` would let Catalyst
@@ -54,34 +53,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scaling-experiment knob (r16, ADDITIVE — absent means the
-    // committed protocol is unchanged): by default shuffle partitions
-    // TRACK the core count, so a low-core sweep also does fewer
-    // shuffle partitions and the core-scaling signal conflates two
-    // variables (BASELINE.md "Core-scaling protocol"). Setting
-    // SPARK_GRAFT_SHUFFLE_PARTS pins the partition count independently
-    // of $SPARK_GRAFT_CPUS for a controlled scaling run.
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // standalone-subquery DPP (q351 and the partitioned tier rely on
-      // runtime commit pruning without a reusable broadcast) - pinned
-      // at builder time so planning never flips mid-session
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      .config("spark.ui.enabled", "false")
-      // stress-sweep knob (SPARK_GRAFT_MAXPART): with the 1 MB-row-
-      // group ScaleUp data, a matching split size parallelizes scans
-      // the way a real many-split input would; the committed sf0.1
-      // protocol leaves the Spark default untouched
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "134217728"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession(cpus)
 
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadAtStart = osBean.getSystemLoadAverage

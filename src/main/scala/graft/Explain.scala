@@ -1,30 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time named catalog queries (noop sink, full plan) and
-  * optionally dump the formatted physical plan. Mirrors Bench's session
-  * config so timings are comparable.
+  * optionally dump the formatted physical plan.
   *
   * Usage: runMain graft.Explain [--explain] [--dump=DIR] q3_join_agg ...
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 4).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val showPlan = args.contains("--explain")
     val dumpDir = args.collectFirst {
       case a if a.startsWith("--dump=") => a.stripPrefix("--dump=") }
     val names = args.filterNot(_.startsWith("--"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // same untimed warmup as Bench
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()

@@ -172,13 +172,7 @@ object Pipeline {
 
   def main(args: Array[String]): Unit = {
     val Array(inputDir, stagingDir, cleanDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     try {
       val processed = run(spark, inputDir, stagingDir, cleanDir, outDir)
       println(if (processed) s"[pipeline] wrote $outDir"

@@ -530,20 +530,11 @@ object CdcUpsert {
       dir: String): DataFrame = {
     buildLifecycle(spark, dir)
     // the commit-routing joins prune the partitioned data scans via
-    // dynamic partition pruning; Spark's default only inserts the
-    // runtime filter when it can reuse an existing broadcast, which
-    // a fresh TVF invocation doesn't have — allow the standalone
-    // subquery so the base commit is pruned at ANY scale (the spec
-    // asserts the non-trivial dynamicpruning filter and the
-    // partitions-read). This is a SESSION-LEVEL deployment default —
-    // every committed entry point (Bench/Verify/TestSpark) pins it
-    // at builder time so no query flips planning mid-session; the
-    // set here is idempotent and only covers ad-hoc sessions. It
-    // cannot be scoped save/restore: the returned frame plans lazily
-    // at the caller's execution point.
-    spark.conf.set(
-      "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-      "false")
+    // dynamic partition pruning; a fresh TVF invocation has no
+    // broadcast to reuse, so this relies on the session's standalone-
+    // subquery DPP (GraftSession pins reuseBroadcastOnly=false) to
+    // prune the base commit at ANY scale (the spec asserts the
+    // non-trivial dynamicpruning filter and the partitions-read)
     spark.sql(s"""
       CREATE OR REPLACE TEMPORARY FUNCTION table_changes(
         from_v INT, to_v INT)

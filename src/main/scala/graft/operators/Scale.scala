@@ -46,7 +46,8 @@ object Scale {
     * base writes). Spark sessions are thread-safe for job submission;
     * callers must not toggle session-wide conf inside the bodies. The
     * first failure is rethrown after all bodies finish, so error
-    * semantics match the sequential form. */
+    * semantics match the sequential form; every other failure rides
+    * on it as a suppressed exception. */
   private[graft] def inParallel(bodies: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = bodies.map { b =>
@@ -58,7 +59,11 @@ object Scale {
       t
     }
     threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(first.addSuppressed(_))
+      throw first
+    }
   }
 
   /** Co-located join via bucketing: both fact tables written bucketed

@@ -1174,6 +1174,8 @@ class RloScan(root: String, requiredSchema: StructType,
 }
 
 object RloScan {
+  private val DefaultSplitBytes = 128L * 1024 * 1024
+
   /** The scan-task planning shared by batch scans and the streaming
     * source: Spark's own maxSplitBytes rule (fill the cluster before
     * hitting the ceiling — split size shrinks to bytes-per-core when
@@ -1193,10 +1195,7 @@ object RloScan {
     }
     val ceiling = splitBytes()
     val openCost = math.min(4L * 1024 * 1024, ceiling)
-    val parallelism =
-      try org.apache.spark.sql.SparkSession.active
-        .sparkContext.defaultParallelism
-      catch { case _: Throwable => 8 }
+    val parallelism = fromSession(8)(_.sparkContext.defaultParallelism)
     val totalBytes = files.map(_._3 + openCost).sum
     val split = math.min(ceiling,
       math.max(openCost, totalBytes / math.max(1, parallelism)))
@@ -1225,16 +1224,22 @@ object RloScan {
   /** Read-side split target: ranges of this many bytes per input
     * partition (conf `spark.graft.rlo.split.bytes`, default 128 MB —
     * Spark's own files.maxPartitionBytes neighborhood). */
-  def splitBytes(): Long =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.rlo.split.bytes", (128L * 1024 * 1024).toString)
-      .toLong
-    catch { case _: Throwable => 128L * 1024 * 1024 }
+  def splitBytes(): Long = fromSession(DefaultSplitBytes)(
+    _.conf.getOption("spark.graft.rlo.split.bytes")
+      .fold(DefaultSplitBytes)(_.toLong))
 
-  def columnarEnabled(): Boolean =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.rlo.columnar.enabled", "true").toBoolean
-    catch { case _: Throwable => true }
+  def columnarEnabled(): Boolean = fromSession(true)(
+    _.conf.getOption("spark.graft.rlo.columnar.enabled")
+      .fold(true)(_.toBoolean))
+
+  /** Read from the driver's session (the active one, else the default
+    * one); `default` only when there is no session, e.g. inside a task.
+    * A malformed setting throws rather than falling back. */
+  private[sources] def fromSession[T](default: T)(
+      read: org.apache.spark.sql.SparkSession => T): T =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .fold(default)(read)
 
   /** Extract the commit set of an `IN` / `=` runtime predicate on
     * `_partition`. */
@@ -1993,11 +1998,9 @@ object RloDataWriter {
   /** Session override (`spark.graft.rlo.target.file.bytes`),
     * resolved DRIVER-side at write planning and shipped to tasks in
     * the writer factory. */
-  def sessionTargetBytes(): Long =
-    try org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.rlo.target.file.bytes",
-        DefaultTargetFileBytes.toString).toLong
-    catch { case _: Throwable => DefaultTargetFileBytes }
+  def sessionTargetBytes(): Long = RloScan.fromSession(DefaultTargetFileBytes)(
+    _.conf.getOption("spark.graft.rlo.target.file.bytes")
+      .fold(DefaultTargetFileBytes)(_.toLong))
 }
 
 /** Per-task parquet segment writer (executor-side): standard parquet

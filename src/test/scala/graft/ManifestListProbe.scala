@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for PERF_r10's two-level-metadata table: what
@@ -33,12 +33,7 @@ object ManifestListProbe {
   private val KeysPerFile = 1000L
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def buildAndProbe(scaleName: String, commits: Int): Unit = {
       val n = commits.toLong * FilesPerCommit

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query micro-bench (test scope, not shipped): times the
   * named catalog queries in isolation, 3 runs each, median reported —
   * the tool for chasing a single bench outlier without a full
@@ -13,19 +11,7 @@ object QueryBench {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // same stress-sweep knob as graft.Bench so single-query probes
-      // of ScaleUp data run under the pinned protocol's split size
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "134217728"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val ts = (1 to 3).map { _ =>

@@ -2,28 +2,36 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // standalone-subquery DPP (q351 and the partitioned tier rely on
-      // runtime commit pruning without a reusable broadcast) - pinned
-      // at builder time so planning never flips mid-session
-      .config("spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4)
   val sf = "/root/testdata/sf0.001"
 }
 
 class RelationalSpec extends AnyFunSuite {
   import TestSpark._
+
+  test("the test session carries GraftSession's fixed settings, and " +
+      "GraftSession is the only place in src/ that builds a session") {
+    assert(spark.sparkContext.master == "local[4]")
+    Seq("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly" ->
+        "false",
+      "spark.ui.enabled" -> "false").foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, k)
+    }
+    val needle = "SparkSession" + ".builder"
+    val src = java.nio.file.Paths.get("src")
+    assert(java.nio.file.Files.isDirectory(src))
+    val builders = scala.util.Using.resource(java.nio.file.Files.walk(src))(
+      _.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          java.nio.file.Files.readString(p).contains(needle))
+        .map(_.getFileName.toString).toList)
+    assert(builders == Seq("GraftSession.scala"), builders)
+  }
 
   test("every registered query runs, returns rows, and plans no " +
       "cartesian product at sf0.001") {

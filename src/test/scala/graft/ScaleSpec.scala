@@ -8,6 +8,19 @@ import graft.operators.Scale
 class ScaleSpec extends AnyFunSuite {
   import TestSpark._
 
+  test("inParallel rethrows one failure and keeps every other failure " +
+      "as a suppressed exception") {
+    val e = intercept[IllegalStateException] {
+      Scale.inParallel(
+        () => throw new IllegalStateException("a"),
+        () => throw new IllegalStateException("b"),
+        () => ())
+    }
+    assert(e.getSuppressed.length == 1)
+    assert(Set(e.getMessage, e.getSuppressed.head.getMessage) ==
+      Set("a", "b"))
+  }
+
   test("partition audit answers counts from parquet footers, not a " +
       "data scan") {
     val plan = operators.Egress.q187PartitionAudit(spark, sf)

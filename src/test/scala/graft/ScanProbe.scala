@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-side measurement tooling (never part of the library): the
   * r14 scan-throughput probe — the DSv2 connector's vectorized read
   * path vs Spark's native parquet scan over the SAME segment files,
@@ -25,17 +23,7 @@ import org.apache.spark.sql.SparkSession
 object ScanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf0.5")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(
-        "spark.sql.optimizer.dynamicPartitionPruning.reuseBroadcastOnly",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     graft.operators.SqlDml.ensureCatalog(spark)
     // throughput needs BYTES: replicate orders 8x (disjoint key

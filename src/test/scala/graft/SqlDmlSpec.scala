@@ -404,6 +404,9 @@ class SqlDmlSpec extends AnyFunSuite {
       assert(parts.length > 3,
         s"want range splits beyond the 3 segment files, got " +
           s"${parts.length}")
+      // a malformed target fails loudly instead of reading as 128 MB
+      spark.conf.set("spark.graft.rlo.split.bytes", "abc")
+      intercept[NumberFormatException](RloScan.splitBytes())
     } finally spark.conf.unset("spark.graft.rlo.split.bytes")
   }
 
