@@ -19,17 +19,22 @@ import graft.sources.Ingest
 object Pipeline {
 
   /** The DAG's retry semantics (`etl_csv_to_dwh.py:5-9`): n retries
-    * after the first attempt, fixed delay between attempts. */
+    * after the first attempt, fixed delay between attempts. When every
+    * attempt fails, the last failure is thrown with each earlier
+    * attempt's failure attached as suppressed, in attempt order. */
   def retry[T](retries: Int, delayMs: Long = 0)(f: => T): T = {
-    var attempt = 0
+    val failed = scala.collection.mutable.ArrayBuffer.empty[Throwable]
     while (true) {
       try return f
       catch {
         // NonFatal only: never retry through OOM/interrupt — a fatal
         // error means the JVM (or the caller's cancellation) wins
-        case scala.util.control.NonFatal(_) if attempt < retries =>
-          attempt += 1
+        case scala.util.control.NonFatal(e) if failed.size < retries =>
+          failed += e
           if (delayMs > 0) Thread.sleep(delayMs)
+        case scala.util.control.NonFatal(e) =>
+          failed.filterNot(_ eq e).foreach(e.addSuppressed)
+          throw e
       }
     }
     throw new IllegalStateException("unreachable")

@@ -133,7 +133,9 @@ object CdcUpsert {
     * commit_id — stats maintenance is incremental AND idempotent),
     * delete artifacts (partitioned by dbatch), and both manifests
     * (partitioned by version). Base = all orders as commit `b_base`,
-    * version 1. */
+    * version 1. Every table declares dynamic partition overwrite, so
+    * an overwriting `insertInto` from any session replaces only the
+    * partitions it writes. */
   private[graft] def initBase(spark: SparkSession, dir: String): Unit = {
     import spark.implicits._
     Seq(CuData, CuManifest, CuSegstats, CuDeletes, CuDManifest)
@@ -147,6 +149,7 @@ object CdcUpsert {
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("o_orderdate"), lit("b_base").as("commit_id"))
           .write.partitionBy("commit_id")
+          .option("partitionOverwriteMode", "dynamic")
           .mode(SaveMode.Overwrite).saveAsTable(CuData)
         spark.table(CuData).groupBy(col("commit_id"))
           .agg(min(col("o_orderdate")).as("min_ts"),
@@ -155,28 +158,23 @@ object CdcUpsert {
           .select(col("min_ts"), col("max_ts"), col("n_rows"),
             col("commit_id"))
           .write.partitionBy("commit_id")
+          .option("partitionOverwriteMode", "dynamic")
           .mode(SaveMode.Overwrite).saveAsTable(CuSegstats)
       },
       () => Seq(("b_base", 1)).toDF("commit_id", "version")
         .write.partitionBy("version")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite).saveAsTable(CuManifest),
       // artifact + delete-manifest shells: rows appear from tick 0 on
       () => Seq.empty[(Long, String, String)]
         .toDF("del_key", "target_commit", "dbatch")
         .write.partitionBy("dbatch")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite).saveAsTable(CuDeletes),
       () => Seq.empty[(String, Int)].toDF("dbatch", "version")
         .write.partitionBy("version")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite).saveAsTable(CuDManifest))
-  }
-
-  /** Run `body` under dynamic partition-overwrite (the idempotent
-    * write mode of every replayable writer in this tier). */
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val old = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try body finally spark.conf.set(key, old)
   }
 
   /** Apply ONE CDC tick — the unit both q337's foreachBatch and
@@ -189,9 +187,11 @@ object CdcUpsert {
     *      to the segments of version t+1;
     *   4. manifest version t+2 (commits b_base,u0..ut; delete scope
     *      cd0..cdt).
-    * Every write is a dynamic partition overwrite keyed by the tick,
-    * so a replayed trigger is byte-identical (CdcUpsertSpec re-runs a
-    * tick and asserts it). */
+    * Every write is an overwriting `insertInto` keyed by the tick,
+    * and every table it writes declares dynamic partition overwrite
+    * ([[initBase]]), so a replayed trigger is byte-identical
+    * (CdcUpsertSpec re-runs a tick and asserts it) without touching
+    * the session's overwrite mode. */
   private[graft] def applyTick(batch: DataFrame): Unit = {
     val s = batch.sparkSession
     import s.implicits._
@@ -237,64 +237,62 @@ object CdcUpsert {
         col("o_orderdate"), lit(s"u$t").as("commit_id"))
     val routedKeys = pinned.filter(col("op").isin("U", "D"))
       .select(col("o_orderkey"), col("pre_orderdate").as("o_orderdate"))
-    withDynamicOverwrite(s) {
-      // 3. (computed FIRST, r16 opt) the delete artifact: pre-image
-      // keys routed by the per-commit stats of version t+1 (the table
-      // as of the previous tick — pinned, so replay routes
-      // identically). Pinning it here also fixes the routing input
-      // before the stats table gains its u<t> row below.
-      val routed = TableFormat
-        .routeDeletes(s, CuSegstats, live, routedKeys, s"cd$t")
-        .select(col("del_key"), col("target_commit"), col("dbatch"))
-        .localCheckpoint(eager = false) // materialized by cnt below
-      // PRE-IMAGE-DATE CONTRACT (r12 advice): a before-image must
-      // carry the date of the row's CURRENT segment — after an
-      // update, the post-image (CDC-day) date, because that is the
-      // segment the row now lives in. A feed that violates it (e.g.
-      // a delete whose pre-image date predates the row's last
-      // update) routes to no live segment and the delete would be
-      // silently lost; assert resolution completeness here, at the
-      // writer, where the feed can still be rejected — now BEFORE any
-      // write lands (r16: the old shape had already appended the data
-      // commit when a bad feed was caught). One churn-sized action.
-      val cnt = routedKeys.select(col("o_orderkey").as("k"),
-          lit(1).as("side"))
-        .unionByName(routed.select(col("del_key").as("k"),
-          lit(2).as("side")))
-        .agg(countDistinct(when(col("side") === 1, col("k"))).as("nk"),
-          countDistinct(when(col("side") === 2, col("k"))).as("nr"))
-        .collect().head
-      val (nKeys, nRouted) = (cnt.getLong(0), cnt.getLong(1))
-      require(nRouted == nKeys,
-        s"tick $t: ${nKeys - nRouted} of $nKeys pre-image keys route " +
-          "to no live segment — before-images must carry the date of " +
-          "the row's current segment (post-update date after an update)")
-      // 1.+2.+3. the append commit, its stats row, and the routed
-      // artifact are disjoint-table writes off pinned inputs —
-      // overlap all three (guide §2.6; r16 widens the r15 two-way
-      // wave: `routed` is pinned so its write re-reads nothing)
-      Scale.inParallel(
-        () => upserts.write.mode(SaveMode.Overwrite).insertInto(CuData),
-        () => upserts.groupBy(col("commit_id"))
-          .agg(min(col("o_orderdate")).as("min_ts"),
-            max(col("o_orderdate")).as("max_ts"),
-            count(lit(1)).as("n_rows"))
-          .select(col("min_ts"), col("max_ts"), col("n_rows"),
-            col("commit_id"))
-          .write.mode(SaveMode.Overwrite).insertInto(CuSegstats),
-        () => routed.write.mode(SaveMode.Overwrite).insertInto(CuDeletes))
-      // 4. both manifests: version t+2, one row set each — still
-      // written LAST (the publish point; the mid-drain spec's crash
-      // window depends on it), but the two manifest tables are
-      // independent of each other, so their tiny writes overlap
-      Scale.inParallel(
-        () => (("b_base" +: (0 to t).map("u" + _)).map((_, t + 2)))
-          .toDF("commit_id", "version")
-          .write.mode(SaveMode.Overwrite).insertInto(CuManifest),
-        () => ((0 to t).map(i => (s"cd$i", t + 2)))
-          .toDF("dbatch", "version")
-          .write.mode(SaveMode.Overwrite).insertInto(CuDManifest))
-    }
+    // 3. (computed FIRST, r16 opt) the delete artifact: pre-image
+    // keys routed by the per-commit stats of version t+1 (the table
+    // as of the previous tick — pinned, so replay routes
+    // identically). Pinning it here also fixes the routing input
+    // before the stats table gains its u<t> row below.
+    val routed = TableFormat
+      .routeDeletes(s, CuSegstats, live, routedKeys, s"cd$t")
+      .select(col("del_key"), col("target_commit"), col("dbatch"))
+      .localCheckpoint(eager = false) // materialized by cnt below
+    // PRE-IMAGE-DATE CONTRACT (r12 advice): a before-image must
+    // carry the date of the row's CURRENT segment — after an
+    // update, the post-image (CDC-day) date, because that is the
+    // segment the row now lives in. A feed that violates it (e.g.
+    // a delete whose pre-image date predates the row's last
+    // update) routes to no live segment and the delete would be
+    // silently lost; assert resolution completeness here, at the
+    // writer, where the feed can still be rejected — now BEFORE any
+    // write lands (r16: the old shape had already appended the data
+    // commit when a bad feed was caught). One churn-sized action.
+    val cnt = routedKeys.select(col("o_orderkey").as("k"),
+        lit(1).as("side"))
+      .unionByName(routed.select(col("del_key").as("k"),
+        lit(2).as("side")))
+      .agg(countDistinct(when(col("side") === 1, col("k"))).as("nk"),
+        countDistinct(when(col("side") === 2, col("k"))).as("nr"))
+      .collect().head
+    val (nKeys, nRouted) = (cnt.getLong(0), cnt.getLong(1))
+    require(nRouted == nKeys,
+      s"tick $t: ${nKeys - nRouted} of $nKeys pre-image keys route " +
+        "to no live segment — before-images must carry the date of " +
+        "the row's current segment (post-update date after an update)")
+    // 1.+2.+3. the append commit, its stats row, and the routed
+    // artifact are disjoint-table writes off pinned inputs —
+    // overlap all three (r16 widens the r15 two-way
+    // wave: `routed` is pinned so its write re-reads nothing)
+    Scale.inParallel(
+      () => upserts.write.mode(SaveMode.Overwrite).insertInto(CuData),
+      () => upserts.groupBy(col("commit_id"))
+        .agg(min(col("o_orderdate")).as("min_ts"),
+          max(col("o_orderdate")).as("max_ts"),
+          count(lit(1)).as("n_rows"))
+        .select(col("min_ts"), col("max_ts"), col("n_rows"),
+          col("commit_id"))
+        .write.mode(SaveMode.Overwrite).insertInto(CuSegstats),
+      () => routed.write.mode(SaveMode.Overwrite).insertInto(CuDeletes))
+    // 4. both manifests: version t+2, one row set each — still
+    // written LAST (the publish point; the mid-drain spec's crash
+    // window depends on it), but the two manifest tables are
+    // independent of each other, so their tiny writes overlap
+    Scale.inParallel(
+      () => (("b_base" +: (0 to t).map("u" + _)).map((_, t + 2)))
+        .toDF("commit_id", "version")
+        .write.mode(SaveMode.Overwrite).insertInto(CuManifest),
+      () => ((0 to t).map(i => (s"cd$i", t + 2)))
+        .toDF("dbatch", "version")
+        .write.mode(SaveMode.Overwrite).insertInto(CuDManifest))
   }
 
   /** Build the full CDC lifecycle in batch — base + all three ticks

@@ -221,9 +221,11 @@ object Egress {
     * leaving the rest of the table untouched (vs static overwrite,
     * which would truncate everything). Here: land orders partitioned
     * by year, then re-deliver 1997 with a price adjustment; the final
-    * read must show adjusted 1997 next to intact other years. At
-    * 100 TB this is how daily reprocessing replaces one day out of
-    * thousands without rewriting history. */
+    * read must show adjusted 1997 next to intact other years. The
+    * re-delivery's writer declares the dynamic mode itself, so the
+    * session's overwrite mode is neither read nor changed. At 100 TB
+    * this is how daily reprocessing replaces one day out of thousands
+    * without rewriting history. */
   def q111DynamicOverwrite(spark: SparkSession, dir: String): DataFrame = {
     val zone = graft.Scratch.dir("q111_orders_by_year")
     val orders = Tables.orders(spark, dir)
@@ -233,16 +235,9 @@ object Egress {
     val adjusted = orders.filter(col("o_year") === 1997)
       // keep the column double so all partition files share one schema
       .withColumn("o_totalprice", (dec(col("o_totalprice")) * 2).cast("double"))
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try adjusted.write.partitionBy("o_year")
+    adjusted.write.partitionBy("o_year")
+      .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite).parquet(zone)
-    finally prev match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
     spark.read.parquet(zone)
       .groupBy(col("o_year"))
       .agg(count(lit(1)).as("n_orders"),

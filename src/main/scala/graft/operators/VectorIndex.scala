@@ -72,7 +72,9 @@ object VectorIndex {
 
   /** Persist the IVF model: centroids → `centroidsTable` (cid, c),
     * per-vector assignments → `indexTable` (vec_id, v) partitioned by
-    * cid. Returns the centers so build-time callers skip a re-read. */
+    * cid. The index declares dynamic partition overwrite, so a cell
+    * rewrite through `insertInto` replaces only the cells it writes.
+    * Returns the centers so build-time callers skip a re-read. */
   private[graft] def buildIvf(spark: SparkSession, e: DataFrame, k: Int,
       centroidsTable: String, indexTable: String): Seq[Seq[Double]] = {
     import spark.implicits._
@@ -85,6 +87,7 @@ object VectorIndex {
     Similarity.lloydAssign(e, centers)
       .select(col("vec_id"), col("v"), col("cid"))
       .write.partitionBy("cid")
+      .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite).saveAsTable(indexTable)
     centers
   }
@@ -304,12 +307,8 @@ object VectorIndex {
         .filter(col("cid").isin(touched: _*))
         .repartition(touched.size, col("cid"))
         .localCheckpoint()
-      val pom = "spark.sql.sources.partitionOverwriteMode"
-      val oldPom = spark.conf.get(pom, "static")
-      spark.conf.set(pom, "dynamic")
-      try compacted.write.mode(SaveMode.Overwrite)
+      compacted.write.mode(SaveMode.Overwrite)
         .insertInto("graft_ivf_index_cpt")
-      finally spark.conf.set(pom, oldPom)
     }
     probeIvf(spark, probesD(spark, dir),
       "graft_ivf_centroids_cpt", "graft_ivf_index_cpt", nprobe = 2)
@@ -353,7 +352,6 @@ object VectorIndex {
     * pass plus work proportional to the DRIFTED cells' population,
     * never the index size. */
   def q302IvfDriftRebuild(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val cent = "graft_ivf_centroids_rb"
     val idxT = "graft_ivf_index_rb"
     val e = Similarity.embDouble(spark, dir)
@@ -376,6 +374,24 @@ object VectorIndex {
           element_at(centersLit, col("cid") + 1)), 9))
         .withColumn("is_new", col("vec_id") % 10 === 7))
       .localCheckpoint() // k rows: feeds the flag set AND the report
+    rebuildDrifted(spark, monitored, centers, cent, idxT,
+      Seq("vec_id", "v"))
+  }
+
+  /** The drift-rebuild tail q302 and q327 share: steps 2 and 3 of
+    * q302's cycle, then the report. Retrain the cells `monitored`
+    * flags (pruned scan, k×dim result) and version-bump the model
+    * table `cent`; reassign ONLY the flagged cells' vectors against
+    * the updated model (read back through [[readCenters]] — the
+    * provenance discipline), carrying the index columns `carry`;
+    * rewrite exactly the affected cell directories of `idxT` through
+    * its dynamic partition overwrite, and drop the flagged cells that
+    * migration emptied (dynamic overwrite cannot write an empty
+    * partition). The report reads the post-maintenance artifact. */
+  private def rebuildDrifted(spark: SparkSession, monitored: DataFrame,
+      centers: IndexedSeq[IndexedSeq[Double]], cent: String, idxT: String,
+      carry: Seq[String]): DataFrame = {
+    import spark.implicits._
     val flagged = monitored.filter(col("drift_flag"))
       .select(col("cid")).collect().map(_.getInt(0)).toSet
     if (flagged.isEmpty)
@@ -401,12 +417,13 @@ object VectorIndex {
       retrained.getOrElse(i, c) }
     updated.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "c")
       .write.mode(SaveMode.Overwrite).saveAsTable(cent)
-    val centers2 = readCenters(spark, cent, 8)
+    val centers2 = readCenters(spark, cent, centers.size)
     // ---- 3. reassign flagged cells' vectors, rewrite affected ----
+    val cols = (carry :+ "cid").map(col)
     val reassigned = Similarity.lloydAssign(
         spark.table(idxT).filter(col("cid").isin(fl: _*))
-          .select(col("vec_id"), col("v")), centers2)
-      .select(col("vec_id"), col("v"), col("cid"))
+          .select(carry.map(col): _*), centers2)
+      .select(cols: _*)
       .localCheckpoint()
     val targets = reassigned.select(col("cid")).distinct()
       .collect().map(_.getInt(0)).toSet
@@ -415,18 +432,15 @@ object VectorIndex {
       if (receivers.isEmpty) reassigned
       else reassigned.unionByName(
         spark.table(idxT).filter(col("cid").isin(receivers: _*))
-          .select(col("vec_id"), col("v"), col("cid"))
+          .select(cols: _*)
           .localCheckpoint())
-    val pom = "spark.sql.sources.partitionOverwriteMode"
-    val oldPom = spark.conf.get(pom, "static")
-    spark.conf.set(pom, "dynamic")
-    try newContents.write.mode(SaveMode.Overwrite).insertInto(idxT)
-    finally spark.conf.set(pom, oldPom)
+    newContents.write.mode(SaveMode.Overwrite).insertInto(idxT)
     Scale.dropPartitions(spark, idxT,
       (flagged -- targets).toSeq.sorted.map(c => s"cid=$c"))
     // ---- report, from the post-maintenance artifact ----
     val after = spark.table(idxT).groupBy(col("cid"))
       .agg(count(lit(1)).as("n_after"))
+    val centersLit = typedlit(centers)
     val c2Lit = typedlit(updated)
     monitored.join(after, Seq("cid"), "left")
       .select(col("cid"), col("drift_flag").as("flagged"),
@@ -696,11 +710,7 @@ object VectorIndex {
         .localCheckpoint()
       val kept = survivors.select(col("cid")).distinct()
         .collect().map(_.getInt(0)).toSet
-      val pom = "spark.sql.sources.partitionOverwriteMode"
-      val oldPom = spark.conf.get(pom, "static")
-      spark.conf.set(pom, "dynamic")
-      try survivors.write.mode(SaveMode.Overwrite).insertInto(idxT)
-      finally spark.conf.set(pom, oldPom)
+      survivors.write.mode(SaveMode.Overwrite).insertInto(idxT)
       Scale.dropPartitions(spark, idxT,
         touched.filterNot(kept).map(c => s"cid=$c"))
     }
@@ -883,6 +893,7 @@ object VectorIndex {
       .select(col("vec_id"), col("v"),
         col("commit_id").as("src_commit"), col("cid"))
       .write.partitionBy("cid")
+      .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite).saveAsTable(VdIndex)
     graft.operators.TableFormat.bindArtifact(spark, VdBindings,
       VdIndex, VdManifest, 1)
@@ -910,70 +921,11 @@ object VectorIndex {
           element_at(centersLit, col("cid") + 1)), 9))
         .withColumn("is_new", col("src_commit").isin(fresh: _*)))
       .localCheckpoint() // k rows: feeds the flag set AND the report
-    val flagged = monitored.filter(col("drift_flag"))
-      .select(col("cid")).collect().map(_.getInt(0)).toSet
-    if (flagged.isEmpty)
-      return monitored.select(col("cid"),
-        col("drift_flag").as("flagged"),
-        (col("n_base") + col("n_new")).as("n_before"),
-        (col("n_base") + col("n_new")).as("n_after"),
-        lit(0.0d).as("center_shift"))
-        .orderBy(col("cid"))
-    val fl = flagged.toSeq.sorted
-    // retrain flagged cells (pruned index scan, k×dim result) and
-    // version-bump the model table — q302's step 2
-    val retrained = spark.table(VdIndex)
-      .filter(col("cid").isin(fl: _*))
-      .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(round(avg(col("x")), 9).as("m"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
-        "s -> s.m)").as("c"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toIndexedSeq).toMap
-    val updated = centers.zipWithIndex.map { case (c, i) =>
-      retrained.getOrElse(i, c) }
-    updated.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "c")
-      .write.mode(SaveMode.Overwrite).saveAsTable(VdCentroids)
-    val centers2 = readCenters(spark, VdCentroids, 8)
-    // reassign ONLY the flagged cells' vectors (src_commit rides
-    // through — provenance survives maintenance), rewrite affected
-    // cell directories — q302's step 3
-    val reassigned = Similarity.lloydAssign(
-        spark.table(VdIndex).filter(col("cid").isin(fl: _*))
-          .select(col("vec_id"), col("v"), col("src_commit")), centers2)
-      .select(col("vec_id"), col("v"), col("src_commit"), col("cid"))
-      .localCheckpoint()
-    val targets = reassigned.select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val receivers = (targets -- flagged).toSeq.sorted
-    val newContents =
-      if (receivers.isEmpty) reassigned
-      else reassigned.unionByName(
-        spark.table(VdIndex).filter(col("cid").isin(receivers: _*))
-          .select(col("vec_id"), col("v"), col("src_commit"), col("cid"))
-          .localCheckpoint())
-    val pom = "spark.sql.sources.partitionOverwriteMode"
-    val oldPom = spark.conf.get(pom, "static")
-    spark.conf.set(pom, "dynamic")
-    try newContents.write.mode(SaveMode.Overwrite).insertInto(VdIndex)
-    finally spark.conf.set(pom, oldPom)
-    Scale.dropPartitions(spark, VdIndex,
-      (flagged -- targets).toSeq.sorted.map(c => s"cid=$c"))
-    // report, from the post-maintenance artifact — q302's shape,
-    // q302's oracle: composition must be invisible in the answer
-    val after = spark.table(VdIndex).groupBy(col("cid"))
-      .agg(count(lit(1)).as("n_after"))
-    val c2Lit = typedlit(updated)
-    monitored.join(after, Seq("cid"), "left")
-      .select(col("cid"), col("drift_flag").as("flagged"),
-        (col("n_base") + col("n_new")).as("n_before"),
-        coalesce(col("n_after"), lit(0L)).as("n_after"),
-        when(col("drift_flag"),
-          round(Similarity.sqDist(element_at(centersLit, col("cid") + 1),
-            element_at(c2Lit, col("cid") + 1)), 9))
-          .otherwise(lit(0.0d)).as("center_shift"))
-      .orderBy(col("cid"))
+    // rebuild: q302's scoped cycle for the flagged cells; src_commit
+    // rides through the reassignment, so provenance survives
+    // maintenance, and the report is q302's shape under q302's
+    // oracle — the composition must be invisible in the answer
+    rebuildDrifted(spark, monitored, centers, VdCentroids, VdIndex,
+      Seq("vec_id", "v", "src_commit"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.CdcUpsert
@@ -24,32 +23,6 @@ import graft.operators.CdcUpsert
   * publishing a version that resolves to an unwritten commit. */
 object StreamCdcUpsert {
 
-  /** Stage the three CDC ticks as deterministic single-file
-    * arrivals, mtime-spaced (the q314 stager shape). */
-  private def stageArrivals(spark: SparkSession, dir: String): String = {
-    val zone = graft.Scratch.dir("q337_cdc")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(zone), true)
-    val t0 = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$dir/orders.parquet")).getModificationTime
-    // independent slice writes with EXPLICIT mtimes — concurrent
-    // staging preserves the intended delivery order (r15 opt)
-    graft.operators.Scale.inParallel(CdcUpsert.Ticks.map { tk => () =>
-      val tmp = s"$zone/_stage_${tk.t}"
-      CdcUpsert.tickRows(spark, dir, tk)
-        .coalesce(1).write.parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.startsWith("part-")).get
-      val dst = new org.apache.hadoop.fs.Path(
-        s"$zone/tick_${tk.t}.parquet")
-      fs.rename(part, dst)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, t0 + (tk.t + 1) * 2000L, -1)
-    }: _*)
-    zone
-  }
-
   /** q337: drain the CDC feed into the versioned table, then read
     * every version through the shared merge-on-read path. The oracle
     * re-derives each version's n_rows / sum_price / n_live_deletes
@@ -58,7 +31,9 @@ object StreamCdcUpsert {
   def q337StreamCdcUpsert(spark: SparkSession, dir: String): DataFrame =
     StreamingWindows.withStreamPartitions(spark) {
       CdcUpsert.initBase(spark, dir)
-      val zone = stageArrivals(spark, dir)
+      val zone = StreamingWindows.stageArrivals(spark, dir, "q337_cdc",
+        CdcUpsert.Ticks.map(tk =>
+          s"tick_${tk.t}.parquet" -> CdcUpsert.tickRows(spark, dir, tk)))
       val schema = CdcUpsert.tickRows(spark, dir,
         CdcUpsert.Ticks.head).schema
       val src = spark.readStream.schema(schema)

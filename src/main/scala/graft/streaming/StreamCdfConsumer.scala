@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{CdcUpsert, Scale, TableFormat}
 
@@ -45,36 +44,6 @@ object StreamCdfConsumer {
   private[graft] val MvT = "graft_mv_cdf"
   private[graft] val BindingsT = "graft_artifact_bindings_cdf"
 
-  /** Stage the CDC table's commit log (versions 2..4 — the three
-    * upsert ticks) as single-file arrivals, mtime-spaced. */
-  private def stageCommitLog(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    val zone = graft.Scratch.dir("q345_cdflog")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(zone), true)
-    val t0 = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$dir/orders.parquet")).getModificationTime
-    // independent one-row writes with EXPLICIT mtimes — concurrent
-    // staging preserves the intended delivery order (r15 opt)
-    Scale.inParallel(CdcUpsert.Ticks.map { tk => () =>
-      val v = tk.t + 2
-      val tmp = s"$zone/_stage_$v"
-      Seq((v, s"2002-0${tk.t + 4}-02 00:00:00"))
-        .toDF("version", "committed_at_s")
-        .select(col("version"),
-          col("committed_at_s").cast("timestamp").as("committed_at"))
-        .coalesce(1).write.parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.startsWith("part-")).get
-      val dst = new org.apache.hadoop.fs.Path(s"$zone/commit_$v.parquet")
-      fs.rename(part, dst)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, t0 + (tk.t + 1) * 2000L, -1)
-    }: _*)
-    zone
-  }
-
   def q345StreamCdfConsumer(spark: SparkSession,
       dir: String): DataFrame =
     StreamingWindows.withStreamPartitions(spark) {
@@ -90,100 +59,18 @@ object StreamCdfConsumer {
             .cast("decimal(28,2)").as("sum_price"))
         .withColumn("mv_version", lit(1))
         .write.partitionBy("mv_version")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite).saveAsTable(MvT)
-      val zone = stageCommitLog(spark, dir)
-
-      val src = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("version",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("committed_at",
-            org.apache.spark.sql.types.TimestampType))))
-        .option("maxFilesPerTrigger", "1").parquet(zone)
-
-      // SEED-ONCE DRIVER STATE (r16, guide §5 — the driver should do
-      // almost no per-tick work): the old body paid, per landed
-      // version, a SHOW PARTITIONS, a bindings-table scan, a
-      // targeted-commit collect, and a fresh MvT read. All four are
-      // derivable from state the consumer already proved or produced:
-      //  - `landed` seeds from ONE SHOW PARTITIONS and grows as this
-      //    consumer lands refreshes (insertInto throws on failure, so
-      //    driver tracking is exact); a RESTARTED consumer re-seeds
-      //    from the real table — the restart contract is intact;
-      //  - `stampedSet` seeds from ONE bindings read (replay guard:
-      //    a restarted trigger still sees its earlier stamp);
-      //  - `targeted` resolves every tick's routing scope in one
-      //    metadata pass (the artifacts all precede the stream);
-      //  - `lastState` carries the pinned v−1 refresh to tick v (the
-      //    pin is materialized by v−1's own write), falling back to
-      //    the versioned table when absent — which is exactly the
-      //    restart path, so state is still restartable from disk.
-      val landed = scala.collection.mutable.Set(
-        spark.sql(s"SHOW PARTITIONS $MvT").collect()
-          .map(_.getString(0).stripPrefix("mv_version=").toInt): _*)
-      val stampedSet = scala.collection.mutable.Set(
-        spark.table(BindingsT)
-          .filter(col("artifact") === MvT)
-          .select(col("bound_version"))
-          .collect().map(_.getInt(0)): _*)
+      // every tick's routing scope in one metadata pass (the
+      // artifacts all precede the stream)
       val targeted = CdcUpsert.targetedByBatch(spark)
-      var lastState: Option[(Int, DataFrame)] = None
-      val consumeOne: (DataFrame, Long) => Unit = (batch, _) => {
-        val s = batch.sparkSession
-        val versions = batch.select(col("version"))
-          .collect().map(_.getInt(0)).distinct.sorted
-        versions.foreach { v =>
-          require(landed.contains(v - 1),
-            s"commit $v arrived before refresh ${v - 1} landed")
-          val prev = lastState match {
-            case Some((pv, st)) if pv == v - 1 => st
-            case _ => s.table(MvT)
-              .filter(col("mv_version") === v - 1)
-              .select(col("o_custkey"), col("n_orders"),
-                col("sum_price"))
-          }
-          // the row-level feed for this commit — the ONE shared
-          // derivation; its fold is exact by the q338 certificate
-          val feed = CdcUpsert.changeFeedStepPre(s, v - 2,
-            targeted.getOrElse(s"cd${v - 2}", Seq.empty))
-          // LAZY pin: load-bearing twice over — it hides the MvT
-          // lineage so the self-overwrite below is legal, and the
-          // write job materializes it so the NEXT tick's fold reads
-          // the pinned blocks instead of re-scanning the table
-          val refreshed = TableFormat.mvApplyDelta(prev,
-            CdcUpsert.feedSignedDelta(feed))
-            .withColumn("mv_version", lit(v))
-            .localCheckpoint(eager = false)
-          val pom = "spark.sql.sources.partitionOverwriteMode"
-          val oldPom = s.conf.get(pom, "static")
-          s.conf.set(pom, "dynamic")
-          try refreshed.write.mode(SaveMode.Overwrite).insertInto(MvT)
-          finally s.conf.set(pom, oldPom)
-          landed += v
-          lastState = Some((v, refreshed
-            .select(col("o_custkey"), col("n_orders"),
-              col("sum_price"))))
-          if (!stampedSet.contains(v)) {
-            TableFormat.bindArtifact(s, BindingsT, MvT,
-              CdcUpsert.CuManifest, v)
-            stampedSet += v
-          }
-        }
-      }
-      val query = src.writeStream
-        .option("checkpointLocation", s"$zone/_checkpoint")
-        .foreachBatch(consumeOne)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-
-      (2 to 4).map { v =>
-        spark.table(MvT).filter(col("mv_version") === v)
-          .agg(count(lit(1)).as("n_keys"),
-            sum(col("n_orders")).as("n_orders"),
-            sum(col("sum_price")).cast("double").as("sum_price"))
-          .select(lit(v).as("version"), col("n_keys"), col("n_orders"),
-            col("sum_price"))
-      }.reduce(_ unionByName _).orderBy(col("version"))
+      // the commit log is versions 2..4 — the three upsert ticks; per
+      // version the row-level feed of its tick, through the ONE shared
+      // derivation, whose fold is exact by the q338 certificate
+      StreamChangelogTail.maintainMv(spark, dir, MvT, BindingsT,
+        CdcUpsert.CuManifest, 1,
+        CdcUpsert.Ticks.map(tk => s"2002-0${tk.t + 4}-02 00:00:00"),
+        (s, v) => CdcUpsert.feedSignedDelta(CdcUpsert.changeFeedStepPre(
+          s, v - 2, targeted.getOrElse(s"cd${v - 2}", Seq.empty))))
     }
 }

@@ -33,35 +33,6 @@ import graft.sources.RloMeta
   * content-derived version number. */
 object StreamRloSink {
 
-  /** Stage four deterministic single-file arrival slices (mod-4 key
-    * classes, tick in the data) — the q314 stager reshaped for the
-    * catalog's DATE-typed schema. */
-  private def stageArrivals(spark: SparkSession, dir: String): String = {
-    val zone = graft.Scratch.dir("q358_arrivals")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(zone), true)
-    val orders = SqlDml.ordersAsDate(spark, dir)
-    val t0 = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$dir/orders.parquet")).getModificationTime
-    // the four slice writes are independent and their mtimes are set
-    // EXPLICITLY (not wall-clock), so staging them concurrently still
-    // yields the intended delivery order (guide §2.6, r15 opt)
-    graft.operators.Scale.inParallel((0 until 4).map { k => () =>
-      val tmp = s"$zone/_stage_$k"
-      orders.filter(col("o_orderkey") % 4 === k)
-        .withColumn("tick", lit(k))
-        .coalesce(1).write.parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.startsWith("part-")).get
-      val dst = new org.apache.hadoop.fs.Path(s"$zone/tick_$k.parquet")
-      fs.rename(part, dst)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, t0 + (k + 1) * 2000L, -1)
-    }: _*)
-    zone
-  }
-
   /** Apply ONE arrival batch to the catalog table — shared by both
     * drains (first run and the fresh-checkpoint replay). */
   private def applyBatch(root: String)(batch: DataFrame,
@@ -113,7 +84,13 @@ object StreamRloSink {
       RloMeta.initTable(conf, root, SqlDml.FixtureSchema, "o_orderdate")
       RloMeta.publishVersion(conf, root, 1,
         SqlDml.tsMicros("2000-01-01 00:00:00"), Seq.empty)
-      val zone = stageArrivals(spark, dir)
+      // four single-file arrival slices (mod-4 key classes, tick in
+      // the data) — q314's arrivals in the catalog's DATE-typed schema
+      val orders = SqlDml.ordersAsDate(spark, dir)
+      val zone = StreamingWindows.stageArrivals(spark, dir,
+        "q358_arrivals", (0 until 4).map { k => s"tick_$k.parquet" ->
+          orders.filter(col("o_orderkey") % 4 === k)
+            .withColumn("tick", lit(k)) })
       val srcSchema = SqlDml.FixtureSchema.add("tick",
         org.apache.spark.sql.types.IntegerType)
 

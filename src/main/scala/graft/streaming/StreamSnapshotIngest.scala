@@ -51,39 +51,6 @@ object StreamSnapshotIngest {
   private val DataT = "graft_snap_data_si"
   private val ManifestT = "graft_snap_manifest_si"
 
-  /** Stage the arrival stream as four deterministic single-file
-    * slices (o_orderkey mod 4), each row tagged with its ingest
-    * tick — the fixture analog of four ingest ticks. Modification
-    * times are spaced so the drain SEES them in order, but
-    * correctness never depends on it: the tick rides IN the data. */
-  private def stageArrivals(spark: SparkSession, dir: String): String = {
-    val zone = graft.Scratch.dir("q314_commits")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(zone), true)
-    val orders = Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderdate"))
-    val t0 = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-      s"$dir/orders.parquet")).getModificationTime
-    // independent slice writes with EXPLICIT mtimes — concurrent
-    // staging preserves the intended delivery order (r16, the same
-    // guide-§2.6 overlap the q337/q345/q358 stagers got in r15)
-    Scale.inParallel((0 until 4).map { k => () =>
-      val tmp = s"$zone/_stage_$k"
-      orders.filter(col("o_orderkey") % 4 === k)
-        .withColumn("tick", lit(k))
-        .coalesce(1).write.parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.startsWith("part-")).get
-      val dst = new org.apache.hadoop.fs.Path(s"$zone/tick_$k.parquet")
-      fs.rename(part, dst)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, t0 + (k + 1) * 2000L, -1)
-    }: _*)
-    zone
-  }
-
   /** q314: drain four arrival ticks into four commits + four
     * versions, then time-travel-read every version through the
     * manifest. Version v's content is ticks 0..v-1 by the
@@ -98,16 +65,26 @@ object StreamSnapshotIngest {
       import spark.implicits._
       Scale.dropManaged(spark, DataT)
       Scale.dropManaged(spark, ManifestT)
-      val zone = stageArrivals(spark, dir)
       val orders = Tables.orders(spark, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderdate"))
-      // empty shells, both partitioned by their idempotency key
+      // the arrival stream: four single-file slices (o_orderkey mod
+      // 4), each row tagged with its ingest tick — the fixture analog
+      // of four ingest ticks
+      val zone = StreamingWindows.stageArrivals(spark, dir,
+        "q314_commits", (0 until 4).map { k => s"tick_$k.parquet" ->
+          orders.filter(col("o_orderkey") % 4 === k)
+            .withColumn("tick", lit(k)) })
+      // empty shells, both partitioned by their idempotency key; each
+      // table declares dynamic partition overwrite, so a replayed
+      // batch's insertInto replaces only its own partitions
       orders.filter(lit(false)).withColumn("commit_id", lit("seed"))
         .write.partitionBy("commit_id")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite).saveAsTable(DataT)
       Seq.empty[(String, Int)].toDF("commit_id", "version")
         .write.partitionBy("version")
+        .option("partitionOverwriteMode", "dynamic")
         .mode(SaveMode.Overwrite).saveAsTable(ManifestT)
 
       val src = spark.readStream
@@ -148,21 +125,16 @@ object StreamSnapshotIngest {
           s"tick $tick arrived before ${(0 until tick).map("b" + _)
             .filterNot(written.contains).mkString(",")} committed — " +
             "manifest would reference unwritten commits")
-        val pom = "spark.sql.sources.partitionOverwriteMode"
-        val oldPom = s.conf.get(pom, "static")
-        s.conf.set(pom, "dynamic")
-        try {
-          // idempotent: a replayed batch overwrites ITS partitions
-          batch.drop("tick")
-            .withColumn("commit_id", lit(s"b$tick"))
-            .write.mode(SaveMode.Overwrite).insertInto(DataT)
-          written += s"b$tick" // the commit physically exists NOW —
-          // recorded before the manifest write so a manifest failure
-          // leaves the tracking consistent with the disk state
-          (0 to tick).map(i => (s"b$i", tick + 1))
-            .toDF("commit_id", "version")
-            .write.mode(SaveMode.Overwrite).insertInto(ManifestT)
-        } finally s.conf.set(pom, oldPom)
+        // idempotent: a replayed batch overwrites ITS partitions
+        batch.drop("tick")
+          .withColumn("commit_id", lit(s"b$tick"))
+          .write.mode(SaveMode.Overwrite).insertInto(DataT)
+        written += s"b$tick" // the commit physically exists NOW —
+        // recorded before the manifest write so a manifest failure
+        // leaves the tracking consistent with the disk state
+        (0 to tick).map(i => (s"b$i", tick + 1))
+          .toDF("commit_id", "version")
+          .write.mode(SaveMode.Overwrite).insertInto(ManifestT)
       }
       val query = src.writeStream
         .option("checkpointLocation", s"$zone/_checkpoint")

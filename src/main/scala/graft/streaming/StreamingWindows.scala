@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -48,6 +49,35 @@ object StreamingWindows {
     try body finally spark.conf.set(key, old)
   }
 
+  /** Stage single-file arrivals for a file-source drain: each
+    * `(fileName, slice)` lands as one file in the zone `zoneName`, and
+    * slice i gets the mtime t0 + (i+1)·2 s, where t0 is the mtime of
+    * `orders.parquet`. So a one-file-per-trigger drain sees the slices
+    * in order, yet correctness never depends on it: every stream here
+    * carries its tick or version in the data. The slices are
+    * independent and their mtimes explicit (not wall-clock), so they
+    * are staged concurrently. Returns the zone path. */
+  private[graft] def stageArrivals(spark: SparkSession, dir: String,
+      zoneName: String, slices: Seq[(String, DataFrame)]): String = {
+    val zone = graft.Scratch.dir(zoneName)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(zone), true)
+    val t0 = fs.getFileStatus(new Path(s"$dir/orders.parquet"))
+      .getModificationTime
+    graft.operators.Scale.inParallel(slices.zipWithIndex.map {
+      case ((name, slice), i) => () =>
+        val tmp = new Path(s"$zone/_stage_$i")
+        slice.coalesce(1).write.parquet(tmp.toString)
+        val part = fs.listStatus(tmp).map(_.getPath)
+          .find(_.getName.startsWith("part-")).get
+        val dst = new Path(s"$zone/$name")
+        fs.rename(part, dst)
+        fs.delete(tmp, true)
+        fs.setTimes(dst, t0 + (i + 1) * 2000L, -1)
+    }: _*)
+    zone
+  }
+
   /** Shared pipeline of the complete/append-mode twins q39/q136:
     * event stream → µs event time → 10-minute watermark → 5-minute
     * tumbling counts per type. One definition so the two output modes
@@ -90,7 +120,6 @@ object StreamingWindows {
     * production stream lives on. */
   def q116StreamMultibatch(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val zone = graft.Scratch.dir("q116_events_multi")
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)

@@ -73,13 +73,15 @@ class CleanseSpec extends AnyFunSuite {
   }
 
   test("cleanse round-trips through CSV like the reference pipeline") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    fixture().write.mode("overwrite").option("header", "true").csv(tmp)
-    val back = spark.read.option("header", "true")
-      .option("inferSchema", "true").csv(tmp)
-    val out = Cleanse.cleanseTitles(back).orderBy("show_id").collect()
-    assert(out.length == 5)
-    assert(out.map(_.getString(0)).toSeq == Seq("s1", "s2", "s3", "s6", "s9"))
+    withTempDir("graft_csv") { tmp =>
+      fixture().write.mode("overwrite").option("header", "true").csv(tmp)
+      val back = spark.read.option("header", "true")
+        .option("inferSchema", "true").csv(tmp)
+      val out = Cleanse.cleanseTitles(back).orderBy("show_id").collect()
+      assert(out.length == 5)
+      assert(out.map(_.getString(0)).toSeq ==
+        Seq("s1", "s2", "s3", "s6", "s9"))
+    }
   }
 
   test("europeCountry property: order of appearance wins") {

@@ -9,58 +9,67 @@ import graft.sources.Ingest
 class IngestPipelineSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def mkTmp(): String =
-    Files.createTempDirectory("graft_ingest").toString
+  /** A fresh directory inside `root`, the test's temp directory. */
+  private def mkTmp(root: String): String =
+    Files.createTempDirectory(Paths.get(root), "d").toString
 
   test("latestFile picks the lexicographically last CSV, None when empty") {
-    val dir = mkTmp()
-    assert(Ingest.latestFile(dir).isEmpty)
-    Files.writeString(Paths.get(dir, "2024-01-01_titles.csv"), "a\n1")
-    Files.writeString(Paths.get(dir, "2024-02-01_titles.csv"), "a\n2")
-    Files.writeString(Paths.get(dir, "notes.txt"), "ignored")
-    assert(Ingest.latestFile(dir).map(_.getFileName.toString)
-      .contains("2024-02-01_titles.csv"))
+    withTempDir("graft_ingest") { root =>
+      val dir = mkTmp(root)
+      assert(Ingest.latestFile(dir).isEmpty)
+      Files.writeString(Paths.get(dir, "2024-01-01_titles.csv"), "a\n1")
+      Files.writeString(Paths.get(dir, "2024-02-01_titles.csv"), "a\n2")
+      Files.writeString(Paths.get(dir, "notes.txt"), "ignored")
+      assert(Ingest.latestFile(dir).map(_.getFileName.toString)
+        .contains("2024-02-01_titles.csv"))
+    }
   }
 
   test("stageCopy overwrites idempotently") {
-    val src = Paths.get(mkTmp(), "in.csv")
-    Files.writeString(src, "x\n1")
-    val staging = mkTmp()
-    val first = Ingest.stageCopy(src, staging)
-    Files.writeString(src, "x\n2")
-    val second = Ingest.stageCopy(src, staging)
-    assert(first == second)
-    assert(Files.readString(second) == "x\n2")
+    withTempDir("graft_ingest") { root =>
+      val src = Paths.get(mkTmp(root), "in.csv")
+      Files.writeString(src, "x\n1")
+      val staging = mkTmp(root)
+      val first = Ingest.stageCopy(src, staging)
+      Files.writeString(src, "x\n2")
+      val second = Ingest.stageCopy(src, staging)
+      assert(first == second)
+      assert(Files.readString(second) == "x\n2")
+    }
   }
 
   test("CSV write/read round-trips rows with commas and quotes") {
-    import spark.implicits._
-    val df = Seq((1L, "plain"), (2L, "has, comma"), (3L, "has \"quote\""))
-      .toDF("id", "s")
-    val dir = mkTmp() + "/csv"
-    Ingest.writeCsv(df, dir, singleFile = true)
-    // inference types small ids as int — read positionally, not typed
-    val back = Ingest.readCsv(spark, dir).orderBy("id")
-      .collect().map(r => (r.get(0).toString.toLong, r.getString(1))).toSeq
-    assert(back == Seq((1L, "plain"), (2L, "has, comma"),
-      (3L, "has \"quote\"")))
+    withTempDir("graft_ingest") { root =>
+      import spark.implicits._
+      val df = Seq((1L, "plain"), (2L, "has, comma"), (3L, "has \"quote\""))
+        .toDF("id", "s")
+      val dir = mkTmp(root) + "/csv"
+      Ingest.writeCsv(df, dir, singleFile = true)
+      // inference types small ids as int — read positionally, not typed
+      val back = Ingest.readCsv(spark, dir).orderBy("id")
+        .collect().map(r => (r.get(0).toString.toLong, r.getString(1))).toSeq
+      assert(back == Seq((1L, "plain"), (2L, "has, comma"),
+        (3L, "has \"quote\"")))
+    }
   }
 
   test("permissive CSV quarantines malformed rows instead of failing") {
-    import org.apache.spark.sql.types._
-    val dir = mkTmp()
-    Files.writeString(Paths.get(dir, "dirty.csv"),
-      "id,n\n1,10\nbad-row-no-number,not-an-int\n3,30")
-    val schema = StructType(Seq(
-      StructField("id", IntegerType), StructField("n", IntegerType)))
-    val df = Ingest.readCsvPermissive(spark, dir, schema).cache()
-    assert(df.count() == 3)
-    val corrupt = df.filter("_corrupt IS NOT NULL").collect()
-    assert(corrupt.length == 1)
-    assert(corrupt.head.getAs[String]("_corrupt")
-      .contains("bad-row-no-number"))
-    assert(df.filter("_corrupt IS NULL").count() == 2)
-    df.unpersist()
+    withTempDir("graft_ingest") { root =>
+      import org.apache.spark.sql.types._
+      val dir = mkTmp(root)
+      Files.writeString(Paths.get(dir, "dirty.csv"),
+        "id,n\n1,10\nbad-row-no-number,not-an-int\n3,30")
+      val schema = StructType(Seq(
+        StructField("id", IntegerType), StructField("n", IntegerType)))
+      val df = Ingest.readCsvPermissive(spark, dir, schema).cache()
+      assert(df.count() == 3)
+      val corrupt = df.filter("_corrupt IS NOT NULL").collect()
+      assert(corrupt.length == 1)
+      assert(corrupt.head.getAs[String]("_corrupt")
+        .contains("bad-row-no-number"))
+      assert(df.filter("_corrupt IS NULL").count() == 2)
+      df.unpersist()
+    }
   }
 
   test("configureS3A plumbs the Hadoop conf surface") {
@@ -87,36 +96,44 @@ class IngestPipelineSpec extends AnyFunSuite {
     }
     assert(got == "ok" && calls == 3)
     var calls2 = 0
-    intercept[RuntimeException] {
-      Pipeline.retry(1) { calls2 += 1; sys.error("always") }
+    val e = intercept[RuntimeException] {
+      Pipeline.retry(2) { calls2 += 1; sys.error(s"attempt $calls2") }
     }
-    assert(calls2 == 2)
+    assert(calls2 == 3)
+    // the last failure is thrown; the earlier ones ride on it
+    assert(e.getMessage == "attempt 3")
+    assert(e.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("attempt 1", "attempt 2"))
   }
 
   test("staged pipeline runs extract→transform→load end to end") {
-    val input = mkTmp()
-    val staging = mkTmp()
-    val clean = mkTmp() + "/clean"
-    val out = mkTmp() + "/out"
-    // two generations in the input zone: only the newest is processed
-    val header = "show_id,type,title,director,cast,country,date_added," +
-      "release_year,rating,duration,listed_in,description"
-    Files.writeString(Paths.get(input, "batch1.csv"),
-      header + "\ns0,TV Show,Old One,d,c,France,x,2001,TV-MA,1 Season," +
-        "Dramas,old")
-    Files.writeString(Paths.get(input, "batch2.csv"),
-      header + "\ns1,TV Show,New One,d,c,Spain,x,2020,TV-14,1 Season," +
-        "Crime TV Shows,new")
-    assert(Pipeline.run(spark, input, staging, clean, out))
-    val cleaned = spark.read.parquet(clean).collect()
-    assert(cleaned.map(_.getAs[String]("show_id")).toSeq == Seq("s1"))
-    val csv = Ingest.readCsv(spark, out).collect()
-    assert(csv.length == 1 && csv.head.getAs[String]("country") == "Spain")
+    withTempDir("graft_ingest") { root =>
+      val input = mkTmp(root)
+      val staging = mkTmp(root)
+      val clean = mkTmp(root) + "/clean"
+      val out = mkTmp(root) + "/out"
+      // two generations in the input zone: only the newest is processed
+      val header = "show_id,type,title,director,cast,country,date_added," +
+        "release_year,rating,duration,listed_in,description"
+      Files.writeString(Paths.get(input, "batch1.csv"),
+        header + "\ns0,TV Show,Old One,d,c,France,x,2001,TV-MA,1 Season," +
+          "Dramas,old")
+      Files.writeString(Paths.get(input, "batch2.csv"),
+        header + "\ns1,TV Show,New One,d,c,Spain,x,2020,TV-14,1 Season," +
+          "Crime TV Shows,new")
+      assert(Pipeline.run(spark, input, staging, clean, out))
+      val cleaned = spark.read.parquet(clean).collect()
+      assert(cleaned.map(_.getAs[String]("show_id")).toSeq == Seq("s1"))
+      val csv = Ingest.readCsv(spark, out).collect()
+      assert(csv.length == 1 && csv.head.getAs[String]("country") == "Spain")
+    }
   }
 
   test("pipeline reports false on an empty input zone") {
-    assert(!Pipeline.run(spark, mkTmp(), mkTmp(), mkTmp() + "/c",
-      mkTmp() + "/o"))
+    withTempDir("graft_ingest") { root =>
+      assert(!Pipeline.run(spark, mkTmp(root), mkTmp(root), mkTmp(root) + "/c",
+        mkTmp(root) + "/o"))
+    }
   }
 
   test("mergeApply inserts, updates, deletes on the key") {
@@ -136,17 +153,19 @@ class IngestPipelineSpec extends AnyFunSuite {
   }
 
   test("compact rewrites many small files into few size-targeted ones") {
-    import spark.implicits._
-    val in = mkTmp() + "/small"
-    val outDir = mkTmp() + "/compacted"
-    (1 to 1000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-      .repartition(32).write.parquet(in)
-    def parquetFiles(d: String) =
-      Files.list(Paths.get(d)).filter(_.toString.endsWith(".parquet")).count()
-    assert(parquetFiles(in) == 32)
-    val n = operators.Egress.compact(spark, in, outDir, 64L * 1024 * 1024)
-    assert(n == 1 && parquetFiles(outDir) == 1)
-    assert(spark.read.parquet(outDir).count() == 1000)
+    withTempDir("graft_ingest") { root =>
+      import spark.implicits._
+      val in = mkTmp(root) + "/small"
+      val outDir = mkTmp(root) + "/compacted"
+      (1 to 1000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
+        .repartition(32).write.parquet(in)
+      def parquetFiles(d: String) =
+        Files.list(Paths.get(d)).filter(_.toString.endsWith(".parquet")).count()
+      assert(parquetFiles(in) == 32)
+      val n = operators.Egress.compact(spark, in, outDir, 64L * 1024 * 1024)
+      assert(n == 1 && parquetFiles(outDir) == 1)
+      assert(spark.read.parquet(outDir).count() == 1000)
+    }
   }
 
   test("DSv2 source prunes columns and pushes id-range filters into " +

@@ -7,6 +7,14 @@ import scala.jdk.CollectionConverters._
 object TestSpark {
   lazy val spark: SparkSession = GraftSession(4)
   val sf = "/root/testdata/sf0.001"
+
+  /** Run `body` with a fresh temp directory (named `prefix…` under
+    * `java.io.tmpdir`) and delete the directory afterwards, whether
+    * the body passed or failed. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString) finally Scratch.deleteRecursively(dir)
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
@@ -31,6 +39,23 @@ class RelationalSpec extends AnyFunSuite {
           java.nio.file.Files.readString(p).contains(needle))
         .map(_.getFileName.toString).toList)
     assert(builders == Seq("GraftSession.scala"), builders)
+  }
+
+  test("src/main names partitionOverwriteMode only as a table or " +
+      "writer option, never through the session conf") {
+    val key = "partitionOverwriteMode"
+    val main = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(main))
+    val offending = scala.util.Using.resource(
+        java.nio.file.Files.walk(main))(_.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+          .filter { case (l, _) => l.contains(key) &&
+            !l.contains(s""".option("$key", "dynamic")""") }
+          .map { case (l, i) => s"${p.getFileName}:${i + 1}: ${l.trim}" }
+      }.toList)
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 
   test("every registered query runs, returns rows, and plans no " +

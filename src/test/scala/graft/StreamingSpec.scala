@@ -52,14 +52,15 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch lands streaming results through the batch writer") {
-    val out = java.nio.file.Files.createTempDirectory("graft_fb").toString
-    graft.streaming.StreamSink.windowCountsToParquet(spark, sf, out)
-    val landed = spark.read.parquet(s"$out/data")
-      .collect().map(_.toSeq).toSet
-    val batch = Events.q36EventWindows(spark, sf)
-      .select("win_start", "event_type", "n_events")
-      .collect().map(_.toSeq).toSet
-    assert(landed == batch)
+    withTempDir("graft_fb") { out =>
+      graft.streaming.StreamSink.windowCountsToParquet(spark, sf, out)
+      val landed = spark.read.parquet(s"$out/data")
+        .collect().map(_.toSeq).toSet
+      val batch = Events.q36EventWindows(spark, sf)
+        .select("win_start", "event_type", "n_events")
+        .collect().map(_.toSeq).toSet
+      assert(landed == batch)
+    }
   }
 
   test("streaming dedup drops within-watermark duplicate content") {
@@ -157,50 +158,50 @@ class StreamingSpec extends AnyFunSuite {
     // Two separate query incarnations over one checkpoint model the
     // kill/restart (AvailableNow stops are the deterministic form of
     // the kill; recovery reads the same WAL either way).
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ckpt_recovery").toString
-    val in = s"$root/in"; val out = s"$root/out"; val ck = s"$root/ck"
-    val t0 = 1700000400L // minute-aligned epoch seconds
-    def addFile(xs: (Long, Long)*): Unit = // (minuteOffset, key)
-      xs.map { case (m, k) =>
-        (new java.sql.Timestamp((t0 + m * 60) * 1000), k)
-      }.toDF("ts", "key").coalesce(1)
-        .write.mode("append").parquet(in)
-    def runToCompletion(): Unit = {
-      val q = spark.readStream
-        .schema("ts timestamp, key long").parquet(in)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 minute"), col("key"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("win_start"), col("key"), col("n"))
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    withTempDir("graft_ckpt_recovery") { root =>
+      val in = s"$root/in"; val out = s"$root/out"; val ck = s"$root/ck"
+      val t0 = 1700000400L // minute-aligned epoch seconds
+      def addFile(xs: (Long, Long)*): Unit = // (minuteOffset, key)
+        xs.map { case (m, k) =>
+          (new java.sql.Timestamp((t0 + m * 60) * 1000), k)
+        }.toDF("ts", "key").coalesce(1)
+          .write.mode("append").parquet(in)
+      def runToCompletion(): Unit = {
+        val q = spark.readStream
+          .schema("ts timestamp, key long").parquet(in)
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window(col("ts"), "1 minute"), col("key"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").as("win_start"), col("key"), col("n"))
+          .writeStream.format("parquet").option("path", out)
+          .option("checkpointLocation", ck)
+          .outputMode("append")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      // incarnation 1: minutes 0-2 finalized by the minute-60 sentinel
+      // (watermark 50); the minute-60 window stays OPEN in state (n=1)
+      addFile((0, 1), (0, 1), (1, 1), (2, 2), (60, 9))
+      runToCompletion()
+      assert(spark.read.parquet(out).count() == 3,
+        "incarnation 1 must emit exactly the three closed windows")
+      // incarnation 2, same checkpoint: two MORE events land in the
+      // still-open minute-60 window — the correct count of 3 REQUIRES
+      // the recovered state to hold incarnation 1's event — and a
+      // minute-120 sentinel closes it
+      addFile((60, 9), (60, 9), (120, 99))
+      runToCompletion()
+      val got = spark.read.parquet(out)
+        .select(unix_timestamp(col("win_start")), col("key"), col("n"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val want = Set(
+        (t0, 1L, 2L), (t0 + 60, 1L, 1L), (t0 + 120, 2L, 1L),
+        (t0 + 3600, 9L, 3L)) // 1 pre-restart + 2 post-restart events
+      assert(got.length == want.size, // no duplicate emission on replay
+        s"expected ${want.size} rows exactly once, got ${got.length}")
+      assert(got.toSet == want, got.toSeq.sorted.mkString("\n"))
     }
-    // incarnation 1: minutes 0-2 finalized by the minute-60 sentinel
-    // (watermark 50); the minute-60 window stays OPEN in state (n=1)
-    addFile((0, 1), (0, 1), (1, 1), (2, 2), (60, 9))
-    runToCompletion()
-    assert(spark.read.parquet(out).count() == 3,
-      "incarnation 1 must emit exactly the three closed windows")
-    // incarnation 2, same checkpoint: two MORE events land in the
-    // still-open minute-60 window — the correct count of 3 REQUIRES
-    // the recovered state to hold incarnation 1's event — and a
-    // minute-120 sentinel closes it
-    addFile((60, 9), (60, 9), (120, 99))
-    runToCompletion()
-    val got = spark.read.parquet(out)
-      .select(unix_timestamp(col("win_start")), col("key"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val want = Set(
-      (t0, 1L, 2L), (t0 + 60, 1L, 1L), (t0 + 120, 2L, 1L),
-      (t0 + 3600, 9L, 3L)) // 1 pre-restart + 2 post-restart events
-    assert(got.length == want.size, // no duplicate emission on replay
-      s"expected ${want.size} rows exactly once, got ${got.length}")
-    assert(got.toSet == want, got.toSeq.sorted.mkString("\n"))
   }
 
   test("stream index gate emits only new-vs-corpus pairs, matching " +

@@ -1232,7 +1232,11 @@ class TableFormatSpec extends AnyFunSuite {
       "read recompute bit-for-bit") {
     import graft.operators.CdcUpsert
     import graft.streaming.StreamCdfConsumer
+    val pom = "spark.sql.sources.partitionOverwriteMode"
+    val pomBefore = spark.conf.get(pom)
     StreamCdfConsumer.q345StreamCdfConsumer(spark, sf).collect()
+    assert(spark.conf.get(pom) == pomBefore,
+      "the consumer changed the session's partition overwrite mode")
     val stamps = spark.table(StreamCdfConsumer.BindingsT)
       .filter(col("artifact") === StreamCdfConsumer.MvT)
       .groupBy(col("bound_version")).count().collect()
@@ -1250,6 +1254,21 @@ class TableFormatSpec extends AnyFunSuite {
       .localCheckpoint()
     assert(mv4.exceptAll(rec).isEmpty && rec.exceptAll(mv4).isEmpty,
       "streaming CDF state diverges from the MoR recompute")
+    // the MV table carries its overwrite policy: under the session's
+    // own static mode, a plain overwriting insertInto of version 4
+    // (as a consumer restarted outside the operator would write it)
+    // replaces that partition only — every other version survives
+    assert(pomBefore.equalsIgnoreCase("static"), pomBefore)
+    def rowsPerVersion() = spark.table(StreamCdfConsumer.MvT)
+      .groupBy(col("mv_version")).count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val perVersion = rowsPerVersion()
+    assert(perVersion.keySet == Set(1, 2, 3, 4), perVersion.toString)
+    rec.withColumn("mv_version", lit(4))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .insertInto(StreamCdfConsumer.MvT)
+    assert(rowsPerVersion() == perVersion)
+    assert(spark.conf.get(pom) == pomBefore)
   }
 
   test("q311 seeds stay pinned and coverage is monotone in rounds") {
