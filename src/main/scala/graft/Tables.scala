@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -11,8 +13,48 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * row groups / columns the plan needs.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Open `$dir/$name.parquet`. A single file opens against its
+    * memoized schema, so only the first open of a file pays the Spark
+    * job that infers the schema from the footer; every later open
+    * plans without a job. A directory (a multi-file table) keeps the
+    * plain inferring read. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = s"$dir/$name.parquet"
+    fileSchema(spark, p) match {
+      case Some(s) => spark.read.schema(s).parquet(p)
+      case None    => spark.read.parquet(p)
+    }
+  }
+
+  /** Session settings that change what parquet schema inference
+    * returns for the same file; each is part of the memo key. */
+  private val schemaSettings = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** Inferred schema of the single parquet file at `p`, memoized per
+    * (qualified path, length, modification time, schema settings): a
+    * rewritten file or a changed setting is inferred again. None for a
+    * directory or a missing path, which the plain read handles (and
+    * reports) as before. */
+  private def fileSchema(spark: SparkSession, p: String): Option[StructType] = {
+    val path = new Path(p)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st =
+      try fs.getFileStatus(path)
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (st.isDirectory) None
+    else {
+      val key = (fs.makeQualified(path).toString, st.getLen,
+        st.getModificationTime, schemaSettings.map(spark.conf.getOption))
+      Some(schemaCache.getOrElseUpdate(key, spark.read.parquet(p).schema))
+    }
+  }
+
+  private val schemaCache = scala.collection.concurrent.TrieMap
+    .empty[(String, Long, Long, Seq[Option[String]]), StructType]
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")
@@ -42,8 +84,7 @@ object Tables {
 
   /** Raw on-disk schema of events.parquet (footer read only) — what a
     * streaming reader must declare before [[normalizeEventsTs]]. */
-  def eventsFileSchema(s: SparkSession, d: String):
-      org.apache.spark.sql.types.StructType = {
+  def eventsFileSchema(s: SparkSession, d: String): StructType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     s.conf.set("spark.sql.session.timeZone", "UTC") // see events()
     table(s, d, "events").schema

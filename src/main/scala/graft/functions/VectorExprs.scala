@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  LongType, StructField, StructType}
 
 /** Dot product of two float vectors, evaluated in double precision as a
   * sequential fold — a native Catalyst expression with whole-stage
@@ -208,6 +209,98 @@ case class DoubleVecSqDist(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** SemDeDup's per-cluster drop count over one cluster's members, an
+  * `array<struct<id: long, vec: array<double>>>`: the number of
+  * DISTINCT ids b for which some member a with `a.id < b.id` has
+  * `round(dot(a.vec, b.vec), 9) >= threshold`.
+  *
+  * It is the grouped, one-row-per-cluster form of the pair plan
+  * `l.join(r, cid)` → `a_id < b_id` → `round(vec_dot_d(va, vb), 9) >=
+  * threshold` → distinct b per cid, and matches it bit for bit:
+  *  - the dot is [[DoubleVecDot]]'s sequential fold from 0.0, and is
+  *    NULL (never counted) for ragged lengths or a null element;
+  *  - the rounding is Spark's double `round(x, 9)`: `BigDecimal(x)`
+  *    set to scale 9 HALF_UP, NaN and infinities passed through;
+  *  - the compare is Spark SQL's double ordering, where NaN sorts above
+  *    every number, so a NaN cosine (a NaN vector element) counts;
+  *  - a null member, id or vector pairs with nothing, like the join's
+  *    null keys and null dots.
+  * Rounding to 9 decimals moves a value by at most 5e-10, so a dot more
+  * than 1e-9 from the threshold decides the compare without the
+  * BigDecimal round; that is why the threshold must lie in [-1, 1],
+  * the cosine range, where 1e-9 exceeds a double's spacing.
+  *
+  * The work per cluster is the join's: at most one dot per (a, b) pair
+  * with a.id < b.id, and b stops at its first qualifying a. */
+case class ClusterNearDupCount(child: Expression, threshold: Double)
+    extends UnaryExpression with CodegenFallback {
+  require(threshold >= -1.0 && threshold <= 1.0,
+    s"cluster_near_dup_count threshold must be a cosine, got $threshold")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StructType(Array(
+        StructField(_, LongType, _, _),
+        StructField(_, ArrayType(DoubleType, _), _, _))), _) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      "cluster_near_dup_count expects array<struct<id: long, " +
+        s"vec: array<double>>>, got $other")
+  }
+  override def dataType: DataType = LongType
+  override def prettyName: String = "cluster_near_dup_count"
+
+  override def nullSafeEval(input: Any): Any = {
+    val arr = input.asInstanceOf[ArrayData]
+    // members with an id and a null-free vector, sorted by id
+    val members = (0 until arr.numElements()).iterator
+      .filterNot(arr.isNullAt).map(arr.getStruct(_, 2))
+      .filter(m => !m.isNullAt(0) && !m.isNullAt(1) && {
+        val v = m.getArray(1)
+        !(0 until v.numElements()).exists(v.isNullAt)
+      })
+      .map(m => m.getLong(0) -> m.getArray(1).toDoubleArray())
+      .toArray.sortBy(_._1)
+    var count = 0L
+    var s = 0
+    while (s < members.length) {
+      // the run [s, e) shares one id b; its candidates a are [0, s)
+      var e = s
+      while (e < members.length && members(e)._1 == members(s)._1) e += 1
+      var hit = false
+      var j = s
+      while (!hit && j < e) {
+        var i = 0
+        while (!hit && i < s) {
+          hit = near(members(i)._2, members(j)._2)
+          i += 1
+        }
+        j += 1
+      }
+      if (hit) count += 1
+      s = e
+    }
+    count
+  }
+
+  private def near(a: Array[Double], b: Array[Double]): Boolean =
+    a.length == b.length && {
+      var acc = 0.0
+      var i = 0
+      while (i < a.length) {
+        acc += a(i) * b(i)
+        i += 1
+      }
+      if (acc.isNaN || acc >= threshold + 1e-9) true
+      else if (acc < threshold - 1e-9) false
+      else SQLOrderingUtil.compareDoubles(
+        BigDecimal(acc).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+          .toDouble, threshold) >= 0
+    }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): ClusterNearDupCount = copy(child = newChild)
+}
+
 object VectorExprs {
   /** `vec_dot(a, b)` as a Column over array<float> columns. */
   def vecDot(a: Column, b: Column): Column =
@@ -223,4 +316,10 @@ object VectorExprs {
   def vecSqDistD(a: Column, b: Column): Column =
     GraftSqlBridge.column(DoubleVecSqDist(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  /** `cluster_near_dup_count(members)` as a Column over an
+    * array<struct<id, vec>> column; see [[ClusterNearDupCount]]. */
+  def clusterNearDupCount(members: Column, threshold: Double): Column =
+    GraftSqlBridge.column(ClusterNearDupCount(
+      GraftSqlBridge.expression(members), threshold))
 }

@@ -123,13 +123,24 @@ object Dedup {
     minhashCandidatesScoredOf(shingled(documents))
 
   /** [[minhashCandidatesScored]] body over a pre-shingled frame (see
-    * [[minhashPairsOf]] for why the split exists). */
+    * [[minhashPairsOf]] for why the split exists).
+    *
+    * Plan shape: the band self-join carries a `merge` hint, so both
+    * sides plan the same `hashpartitioning(band, band_key)` exchange
+    * over the signature table and the second side reuses the first
+    * (`ReusedExchange`): the 16-MD5-per-shingle signature kernel runs
+    * once per pairing. Left to itself, Spark broadcasts one side of
+    * this small self-join and evaluates the signatures twice, once on
+    * the streamed side and once inside the `BroadcastExchange`. At
+    * 100 TB the sort-merge join on the band bucket is the plan Spark
+    * picks anyway. The candidate pairs are then verified with exact
+    * Jaccard by joining the shingle sets back by doc_id. */
   private[graft] def minhashCandidatesScoredOf(
       shingledDocs: DataFrame): DataFrame = {
     val docs = shingledDocs
     val bands = bandTable(docs)
     val cand = bands.as("a")
-      .join(bands.as("b"),
+      .join(bands.as("b").hint("merge"),
         col("a.band") === col("b.band") &&
           col("a.band_key") === col("b.band_key") &&
           col("a.doc_id") < col("b.doc_id"))

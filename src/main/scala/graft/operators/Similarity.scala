@@ -696,8 +696,8 @@ object Similarity {
     * the hot path" fix for the embedding tier, where the pair stream
     * pays one of these folds per candidate. Fold order, widening, and
     * null/ragged semantics are bit-identical to the HOF forms (the
-    * `*Hof` references below are kept for SimilaritySpec's equality
-    * property; a UDF-based variant measured ~2× SLOWER than the HOFs
+    * interpreted HOF forms live on in SimilaritySpec as the equality
+    * anchor; a UDF-based variant measured ~2× SLOWER than the HOFs
     * from Catalyst→Scala conversion — native expressions are the form
     * that wins). normD's radicand is exactly dotD(a, a): the same
     * Σ a[i]² in the same order as the `transform(a, x -> x*x)` fold. */
@@ -707,14 +707,6 @@ object Similarity {
     VectorExprs.vecDotD(a, b)
   private[graft] def normD(a: Column): Column =
     sqrt(VectorExprs.vecDotD(a, a))
-  // interpreted originals, retained ONLY as the spec's parity anchor
-  private[graft] def sqDistHof(v: Column, c: Column): Column =
-    aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)),
-      lit(0.0d), (a, x) => a + x)
-  private[graft] def dotDHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (x, y) => x + y)
-  private[graft] def normDHof(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (x, y) => x + y))
 
   /** One Lloyd assignment pass against a BROADCAST center set: the
     * centers ride into the executors as a k×64 array literal, so
@@ -735,34 +727,30 @@ object Similarity {
     * mean grid (partial aggregation carries one cell per partition),
     * means rounded to 9 decimals (the q181 discipline — kills the
     * ±1 ulp noise of order-dependent double sums, so both engines
-    * iterate from IDENTICAL centers), then a k-row driver collect.
+    * iterate from IDENTICAL centers), then a driver collect of the
+    * k×dim grid cells, assembled into centers on the driver in
+    * (cid, pos) order. One aggregate, one exchange: the grid is
+    * metadata-sized by construction, so regrouping it per cid and
+    * sorting it is driver work, not three more Spark stages.
     * The collect is the MLlib KMeans pattern: centers are model state,
-    * metadata-sized by construction (k×dim doubles), and pulling them
-    * to the driver is what lets the next assignment pass be a
-    * broadcast literal instead of a corpus-wide join. */
+    * and pulling them to the driver is what lets the next assignment
+    * pass be a broadcast literal instead of a corpus-wide join. */
   private[graft] def recomputeCenters(assigned: DataFrame): Seq[Seq[Double]] = {
-    val rows = assigned
-      .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(round(avg(col("x")), 9).as("m"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
-        "s -> s.m)").as("c"))
-      .orderBy(col("cid"))
-      .collect()
+    val cells = recomputeCentersAt(assigned)
     // Empty clusters would renumber the POSITIONAL center array and
     // silently desync cid from the oracle's group key — fail loudly
     // instead. This dense path serves the fixed-k INDEX tier, whose
     // persisted artifacts require dense 0..k-1 cids by design; the
     // adaptive-k ANALYSIS tier routes through [[recomputeCentersAt]],
     // which handles an emptied cell the way the oracle does.
-    require(rows.map(_.getInt(0)).toSeq == rows.indices,
-      s"empty k-means cluster: got cids ${rows.map(_.getInt(0)).toSeq}")
-    rows.map(_.getSeq[Double](1).toIndexedSeq).toIndexedSeq
+    require(cells.map(_._1) == cells.indices,
+      s"empty k-means cluster: got cids ${cells.map(_._1)}")
+    cells.map(_._2)
   }
 
-  /** Center recompute for the ANALYSIS (adaptive-k) tier: the same
-    * mean grid as [[recomputeCenters]], but centers keep their cid
+  /** Center recompute for the ANALYSIS (adaptive-k) tier, returned in
+    * cid order: the same mean grid as [[recomputeCenters]] (which
+    * builds on this one), but centers keep their cid
     * LABEL instead of a positional slot — an emptied cell simply
     * drops out of the model with every surviving label preserved,
     * which is exactly what the oracle's recompute CTE does (`c1` in
@@ -773,17 +761,15 @@ object Similarity {
     * so the analysis chain handles it instead of crashing — and stays
     * hash-equal to the oracle when it happens. */
   private[graft] def recomputeCentersAt(
-      assigned: DataFrame): Seq[(Int, Seq[Double])] =
+      assigned: DataFrame): IndexedSeq[(Int, Seq[Double])] =
     assigned
       .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("cid"), col("pos"))
       .agg(round(avg(col("x")), 9).as("m"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, m))), " +
-        "s -> s.m)").as("c"))
-      .orderBy(col("cid"))
       .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toSeq
+      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      .groupBy(_._1).toIndexedSeq.sortBy(_._1)
+      .map { case (cid, cs) => cid -> cs.sortBy(_._2).map(_._3).toIndexedSeq }
 
   /** [[lloydAssign]] against a LABELED center set (cid, center) that
     * may carry holes: per row the (9-rounded distance, cid) struct
@@ -883,14 +869,14 @@ object Similarity {
 
   /** q249: SemDeDup — semantic near-dup pruning INSIDE k-means
     * clusters (Abbas et al. 2023's shape: cluster first, then pay the
-    * quadratic pairwise cosine only within a cluster). The pair join
-    * keys on cid, so the corpus shuffles once on a bounded-population
-    * key and the quadratic term is (n/k)² per cluster, never n²; at
-    * 100 TB k scales with the corpus to hold cluster population
-    * roughly constant, which keeps per-cluster pair work flat — the
-    * whole point of the algorithm. Drop rule is deterministic: b is
-    * dropped iff SOME same-cluster a < b has cosine >= 0.35 (rounded
-    * to 9 before the compare), i.e. each cluster keeps its lowest-id
+    * quadratic pairwise cosine only within a cluster). The corpus
+    * shuffles once, on cid, a bounded-population key, and the
+    * quadratic term is (n/k)² per cluster, never n²; at 100 TB k
+    * scales with the corpus to hold cluster population roughly
+    * constant, which keeps per-cluster pair work flat — the whole
+    * point of the algorithm. Drop rule is deterministic: b is dropped
+    * iff SOME same-cluster a < b has cosine >= 0.35 (rounded to 9
+    * before the compare), i.e. each cluster keeps its lowest-id
     * representative per semantic neighborhood.
     *
     * Each vector pre-normalizes to unit length ONCE (a per-row map)
@@ -900,36 +886,38 @@ object Similarity {
     * oracle mirrors the same normalize-then-dot order, so the floats
     * stay bitwise-aligned. */
   def q249SemDedup(spark: SparkSession, dir: String): DataFrame =
-    // the assignment feeds both join sides AND the totals — stage it
-    // once (the q209/q259 discipline) so the Lloyd map doesn't re-run
-    // per consumer (at the 5x stress scale the k·n assignment pass is
-    // the dominant term: 29 → ~13 s measured)
-    semDedupFrom(kmeansAssigned(spark, dir).localCheckpoint())
+    // the final assignment has one consumer, the cluster aggregate, so
+    // its Lloyd map runs inside that aggregate's map stage, unpinned
+    semDedupFrom(kmeansAssigned(spark, dir))
 
   /** q249's report over a prepared assignment — split out so the
     * composed report (q259) can stage the Lloyd chain once and feed
-    * every section from the same checkpointed pass. */
-  private def semDedupFrom(assigned: DataFrame): DataFrame = {
-    val a = assigned
+    * every section from the same checkpointed pass.
+    *
+    * Plan shape: one `groupBy(cid)` aggregate, so one exchange on cid,
+    * collects each cluster's (vec_id, unit vector) members, and the
+    * native [[graft.functions.ClusterNearDupCount]] counts the dropped
+    * ids in the same task. That is the pair join on cid, its distinct
+    * and its per-cluster counts in one pass; the join materialized
+    * about n_c² rows per cluster, each carrying two vectors. A cluster
+    * is still processed in one task, as the join on cid did. */
+  private def semDedupFrom(assigned: DataFrame): DataFrame =
+    unitVectors(assigned)
+      .groupBy(col("cid"))
+      .agg(count(lit(1)).as("n"),
+        VectorExprs.clusterNearDupCount(
+          collect_list(struct(col("vec_id"), col("vn"))), 0.35)
+          .as("n_dropped"))
+      .select(col("cid"), col("n"), col("n_dropped"),
+        (col("n") - col("n_dropped")).as("n_kept"))
+      .orderBy(col("cid"))
+
+  /** (cid, vec_id, vn): each assigned vector scaled to unit length. */
+  private[graft] def unitVectors(assigned: DataFrame): DataFrame =
+    assigned
       .withColumn("nv", normD(col("v")))
       .select(col("cid"), col("vec_id"),
         transform(col("v"), x => x / col("nv")).as("vn"))
-    val l = a.select(col("cid"), col("vec_id").as("a_id"),
-      col("vn").as("va"))
-    val r = a.select(col("cid"), col("vec_id").as("b_id"),
-      col("vn").as("vb"))
-    val dropped = l.join(r, Seq("cid"))
-      .filter(col("a_id") < col("b_id"))
-      .filter(round(dotD(col("va"), col("vb")), 9) >= 0.35)
-      .select(col("cid"), col("b_id")).distinct()
-      .groupBy(col("cid")).agg(count(lit(1)).as("n_dropped"))
-    a.groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .join(dropped, Seq("cid"), "left")
-      .select(col("cid"), col("n"),
-        coalesce(col("n_dropped"), lit(0L)).as("n_dropped"),
-        (col("n") - coalesce(col("n_dropped"), lit(0L))).as("n_kept"))
-      .orderBy(col("cid"))
-  }
 
   /** q254: 1-NN label coherence — the embedding-quality probe run
     * before trusting a vector space for semantic dedup or retrieval:

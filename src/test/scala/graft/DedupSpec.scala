@@ -44,6 +44,34 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)))
   }
 
+  test("q25 computes the MinHash signatures once: one band exchange, " +
+      "the other self-join side reuses it") {
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = Dedup.q25DedupMinhash(spark, sf)
+    df.collect()
+    val finalPlan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    // every node of the final plan, descending into query stages but
+    // not into a reused exchange's original
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case s: QueryStageExec => nodes(s.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    def signs(p: SparkPlan): Boolean = p.expressions.exists(_.exists(
+      _.isInstanceOf[graft.functions.MinHashMd5Sigs]))
+    val all = nodes(finalPlan)
+    val signing = all.filter(signs)
+    assert(signing.size == 1 && signing.head.isInstanceOf[ProjectExec],
+      finalPlan.treeString)
+    val reused = all.collect { case r: ReusedExchangeExec => r }
+    assert(reused.exists(r => nodes(r.child).exists(signs)),
+      finalPlan.treeString)
+  }
+
   test("simhash near-dup pairs have hamming <= 3 and include true dups") {
     import spark.implicits._
     val base = (1 to 60).map(i => s"word$i").mkString(" ")

@@ -80,6 +80,89 @@ class FunctionsSpec extends AnyFunSuite {
     assert(!rows.head.isNullAt(0) && rows.head.getDouble(0) == 11.0)
   }
 
+  test("cluster_near_dup_count equals the SemDeDup pair join: distinct " +
+      "b per cid with some a < b at round(dot, 9) >= 0.35") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    import graft.functions.VectorExprs
+    import graft.operators.Similarity
+    def frame(vecCol: String,
+        rows: Seq[(Int, java.lang.Long, Seq[java.lang.Double])]) =
+      spark.createDataFrame(rows.map { case (c, id, v) =>
+        org.apache.spark.sql.Row(c, id, v) }.asJava,
+        StructType(Seq(StructField("cid", IntegerType),
+          StructField("vec_id", LongType),
+          StructField(vecCol, ArrayType(DoubleType)))))
+    // the pair plan SemDeDup ran before the grouped kernel
+    def viaJoin(a: DataFrame): Map[Int, Long] = {
+      val l = a.select(col("cid"), col("vec_id").as("a_id"), col("vn").as("va"))
+      val r = a.select(col("cid"), col("vec_id").as("b_id"), col("vn").as("vb"))
+      l.join(r, Seq("cid"))
+        .filter(col("a_id") < col("b_id"))
+        .filter(round(VectorExprs.vecDotD(col("va"), col("vb")), 9) >= 0.35)
+        .select(col("cid"), col("b_id")).distinct()
+        .groupBy(col("cid")).agg(count(lit(1)))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
+    def viaKernel(a: DataFrame): Map[Int, Long] =
+      a.groupBy(col("cid"))
+        .agg(VectorExprs.clusterNearDupCount(
+          collect_list(struct(col("vec_id"), col("vn"))), 0.35))
+        .collect().map(r => r.getInt(0) -> r.getLong(1))
+        .filter(_._2 > 0).toMap
+    def d(xs: Double*): Seq[java.lang.Double] = xs.map(Double.box)
+    def row(c: Int, id: java.lang.Long, v: Seq[java.lang.Double]) =
+      (c, id, v)
+
+    // random 6-d vectors over five clusters (dense enough that some
+    // pairs pass 0.35 and some do not), a singleton cluster, a vec_id
+    // repeated inside a cluster, and a NaN vector whose normalized
+    // cosine is NaN (NaN sorts above every double, so it counts)
+    val rnd = new scala.util.Random(7)
+    val random = (0 until 150).map { i =>
+      row(i % 5, i.toLong, Seq.fill(6)(Double.box(rnd.nextGaussian())))
+    } ++ Seq(
+      row(5, 500L, d(1, 2, 3, 4, 5, 6)),
+      row(1, 1L, d(1, 0, 0, 0, 0, 0)),
+      row(2, 1000L, d(1, Double.NaN, 0, 0, 0, 0)))
+    val normalized = Similarity.unitVectors(frame("v", random))
+    // hand-made unit-side members, one case per cluster: the dot of
+    // (x) and (1.0) is exactly x
+    val edge = frame("vn", Seq(
+      row(100, 1L, d(0.3499999995)), row(100, 2L, d(1.0)), // 0.35
+      row(101, 1L, d(0.3499999994)), row(101, 2L, d(1.0)), // 0.349999999
+      row(102, 1L, d(0.3500000004)), row(102, 2L, d(1.0)), // 0.35
+      row(103, 1L, d(0.35)), row(103, 2L, d(1.0)),
+      row(104, 1L, d(1.0)), row(104, 2L, d(1.0, 0.0)), // ragged: NULL
+      row(105, 1L, Seq[java.lang.Double](null)), row(105, 2L, d(1.0)),
+      row(106, 1L, null), row(106, 2L, d(1.0)),        // null vector
+      row(107, null, d(1.0)), row(107, 2L, d(1.0)),    // null id
+      row(108, 1L, d(Double.PositiveInfinity)), row(108, 2L, d(1.0)),
+      row(109, 1L, d(Double.NegativeInfinity)), row(109, 2L, d(1.0)),
+      row(110, 5L, d(1.0)), row(110, 5L, d(1.0)),  // same id: no pair
+      row(111, 3L, d(1.0)), row(111, 7L, d(1.0)),
+      row(111, 7L, d(1.0))))                       // id 7 counts once
+    val all = normalized.unionByName(edge)
+    val expected = viaJoin(all)
+    assert(viaKernel(all) == expected)
+    assert(expected.filter(_._1 >= 100) ==
+      Map(100 -> 1L, 102 -> 1L, 103 -> 1L, 108 -> 1L, 111 -> 1L))
+    assert(expected.get(5).isEmpty) // the singleton drops nothing
+    assert(expected.keySet.intersect((0 to 4).toSet).nonEmpty)
+
+    // a zero vector cannot be normalized: both plans fail the same way
+    // (ANSI division by zero), neither returns a count
+    val zero = Similarity.unitVectors(frame("v", Seq(
+      row(0, 1L, d(1, 1)), row(0, 2L, d(0, 0)))))
+    Seq[DataFrame => Any](viaJoin, viaKernel).foreach { f =>
+      val e = intercept[Exception](f(zero))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("DIVIDE_BY_ZERO")), e.toString)
+    }
+  }
+
   test("extension class wires the same builders for config-time use") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw; builders shared

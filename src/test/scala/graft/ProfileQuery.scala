@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev profiler (test scope, not shipped): runs ONE catalog query with
   * a listener that records every Spark job's wall time and call site,
@@ -8,7 +8,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * time between jobs). This is the guide-§1 empirical loop without a
   * UI: it tells you which pass inside a multi-job catalog query owns
   * the seconds — fixture write vs certificate vs serving read — so
-  * optimization effort lands where the time is.
+  * optimization effort lands where the time is. One line per completed
+  * stage follows: task count, executor run and CPU ms, shuffle write
+  * bytes and input rows — the view that shows a kernel evaluated in two
+  * stages or a chain of single-task stages.
   *
   * Usage: sbt "Test/runMain graft.ProfileQuery q340_crosstable_mv [sfDir]"
   */
@@ -26,6 +29,9 @@ object ProfileQuery {
 
     case class Job(id: Int, start: Long, var end: Long, site: String)
     val jobs = scala.collection.mutable.ArrayBuffer.empty[Job]
+    case class Stage(id: Int, attempt: Int, tasks: Int, runMs: Long,
+        cpuMs: Long, shuffleWriteBytes: Long, inputRows: Long, name: String)
+    val stages = scala.collection.mutable.ArrayBuffer.empty[Stage]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         jobs.synchronized {
@@ -35,6 +41,15 @@ object ProfileQuery {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         jobs.synchronized {
           jobs.find(_.id == e.jobId).foreach(_.end = e.time)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.synchronized {
+          val i = e.stageInfo
+          val m = i.taskMetrics
+          stages += Stage(i.stageId, i.attemptNumber(), i.numTasks,
+            m.executorRunTime, m.executorCpuTime / 1000000L,
+            m.shuffleWriteMetrics.bytesWritten, m.inputMetrics.recordsRead,
+            i.name)
         }
     })
 
@@ -63,6 +78,7 @@ object ProfileQuery {
 
     names.foreach { name =>
       jobs.synchronized(jobs.clear())
+      stages.synchronized(stages.clear())
       samples.clear()
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -77,6 +93,14 @@ object ProfileQuery {
       println("--- jobs by duration ---")
       done.sortBy(j => -(j.end - j.start)).take(10).foreach { j =>
         println(f"  ${(j.end - j.start) / 1e3}%8.3f s  job ${j.id}%4d  ${j.site}")
+      }
+      println("--- stages in completion order: tasks, executor run / " +
+        "CPU ms, shuffle write bytes, input rows ---")
+      stages.synchronized(stages.toVector).foreach { st =>
+        println(f"  stage ${st.id}%4d.${st.attempt} ${st.tasks}%5d tasks " +
+          f"run ${st.runMs}%7d ms cpu ${st.cpuMs}%7d ms " +
+          f"shuffle-w ${st.shuffleWriteBytes}%10d B in ${st.inputRows}%9d rows" +
+          s"  ${st.name}")
       }
       println("--- driver main-thread stack samples (20 ms) ---")
       import scala.jdk.CollectionConverters._

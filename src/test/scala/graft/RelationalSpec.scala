@@ -58,6 +58,86 @@ class RelationalSpec extends AnyFunSuite {
     assert(offending.isEmpty, offending.mkString("\n"))
   }
 
+  test("Tables.table infers a file's schema once per (file version, " +
+      "schema settings); a memoized open starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def jobsOf(group: String): Int = groups.asScala.count(_ == group)
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    def withConf[T](key: String, value: String)(body: => T): T = {
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, value)
+      try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    sc.addSparkListener(listener)
+    try withTempDir("graft_schema_memo") { dir =>
+      val file = java.nio.file.Paths.get(dir, "t.parquet")
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(sf, "nation.parquet"), file)
+      val first = inGroup("memo-first")(Tables.table(spark, dir, "t"))
+      val again = inGroup("memo-again")(Tables.table(spark, dir, "t"))
+      assert(again.schema == first.schema)
+      // a new modification time is a new file version: inferred again
+      java.nio.file.Files.setLastModifiedTime(file,
+        java.nio.file.attribute.FileTime.fromMillis(
+          java.nio.file.Files.getLastModifiedTime(file).toMillis + 10000))
+      inGroup("memo-touched")(Tables.table(spark, dir, "t"))
+      // so is new content of another length, here another table
+      java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "region.parquet"),
+        file, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val region = inGroup("memo-rewritten")(Tables.table(spark, dir, "t"))
+      assert(region.columns.toSeq == Tables.region(spark, sf).columns.toSeq)
+      assert(region.count() == Tables.region(spark, sf).count())
+      // listener events arrive in order: once the last group's job is
+      // in, every earlier job is too
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (jobsOf("memo-rewritten") == 0 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobsOf("memo-first") >= 1)
+      assert(jobsOf("memo-again") == 0)
+      assert(jobsOf("memo-touched") >= 1)
+      assert(jobsOf("memo-rewritten") >= 1)
+
+      // schema settings are part of the key: the same events file reads
+      // ts as TIMESTAMP_NTZ or TIMESTAMP with NTZ inference on or off
+      val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
+      val ts = Seq("true", "false").map(v => withConf(ntzKey, v)(
+        Tables.table(spark, sf, "events").schema("ts").dataType))
+      assert(ts == Seq(TimestampNTZType, TimestampType))
+
+      // an events file with TIMESTAMP(NANOS) ts reads ts as a long under
+      // nanosAsLong; without it the memoized schema is not served and
+      // the open fails as a plain read does
+      val nanos = java.nio.file.Paths.get(dir, "events.parquet").toString
+      val pschema = org.apache.parquet.schema.MessageTypeParser
+        .parseMessageType("message e { required int64 event_id; " +
+          "required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(nanos))
+        .withType(pschema).build()
+      try w.write(new org.apache.parquet.example.data.simple
+        .SimpleGroupFactory(pschema).newGroup()
+        .append("event_id", 1L).append("ts", 1700000000123456789L))
+      finally w.close()
+      val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+      val asLong = withConf(nanosKey, "true")(
+        Tables.table(spark, dir, "events").schema)
+      assert(asLong("ts").dataType == LongType)
+      val without = intercept[org.apache.spark.sql.AnalysisException](
+        withConf(nanosKey, "false")(Tables.table(spark, dir, "events")))
+      assert(without.getMessage.contains("PARQUET_TYPE_ILLEGAL"), without)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("every registered query runs, returns rows, and plans no " +
       "cartesian product at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
