@@ -459,11 +459,9 @@ object CdcUpsert {
     // pin each step (feed + certificate share one pass); the three
     // step derivations are independent churn-sized reads — overlap
     // their materialization (guide §2.6, r15 opt)
-    val stepArr = new Array[DataFrame](Ticks.size)
-    Scale.inParallel(Ticks.map { tk => () =>
-      stepArr(tk.t) = changeFeedStep(spark, tk.t).localCheckpoint()
+    val steps = Scale.inParallel(Ticks.map { tk => () =>
+      changeFeedStep(spark, tk.t).localCheckpoint()
     }: _*)
-    val steps = stepArr.toSeq
     // certificate per step: the feed maintains the per-customer MV —
     // fold its signed rows into state(v) and demand equality with the
     // recompute at v+1 (bit-equal decimal arithmetic, the q324 rule).
@@ -476,16 +474,14 @@ object CdcUpsert {
       // the four per-version MV states are independent MoR reads, and
       // the three per-step equality certificates only consume the
       // pinned states — run each wave concurrently (guide §2.6)
-      val mvArr = new Array[DataFrame](2 + Ticks.size)
-      Scale.inParallel((1 to 1 + Ticks.size).map { v => () =>
-        mvArr(v) = readStateMeta(spark, meta, v)._1
+      val versions = 1 to 1 + Ticks.size
+      val mvAt = versions.zip(Scale.inParallel(versions.map { v => () =>
+        readStateMeta(spark, meta, v)._1
           .groupBy(col("o_custkey"))
           .agg(count(lit(1)).as("n_orders"),
             sum(dec(col("o_totalprice"))).as("sum_price"))
           .localCheckpoint()
-      }: _*)
-      val mvAt: Map[Int, DataFrame] =
-        (1 to 1 + Ticks.size).map(v => v -> mvArr(v)).toMap
+      }: _*)).toMap
       Scale.inParallel(Ticks.map { tk => () =>
         val v = tk.t + 2
         // one-pass multiset equality (r15 opt): the fold is consumed

@@ -224,22 +224,20 @@ object CrossTableMv {
     // sf0.1 collides once max(o_orderkey) outgrows it). The A and B
     // commits are again disjoint-table work → concurrent.
     Tables.requireKeyHeadroom(spark, dir, 40000000L)
-    var aV2 = 0
-    var bV2 = 0
-    Scale.inParallel(
+    val Seq(aV2, bV2) = Scale.inParallel(
       () => {
         Tables.orders(spark, dir).filter(col("o_orderkey") % 100 === 31)
           .select((col("o_orderkey") + 40000000L).as("o_orderkey"),
             col("o_custkey"), lit("a_c2").as("commit_id"))
           .write.insertInto(XmAData)
-        aV2 = TableFormat.stageManifestVersion(spark, XmAManifest, "a_c2")
+        TableFormat.stageManifestVersion(spark, XmAManifest, "a_c2")
       },
       () => {
         Tables.lineitem(spark, dir).filter(col("l_orderkey") % 100 === 31)
           .select((col("l_orderkey") + 40000000L).as("l_orderkey"),
             col("l_extendedprice"), lit("b_c2").as("commit_id"))
           .write.insertInto(XmBData)
-        bV2 = TableFormat.stageManifestVersion(spark, XmBManifest, "b_c2")
+        TableFormat.stageManifestVersion(spark, XmBManifest, "b_c2")
       })
     Seq((2, "A", aV2), (2, "B", bV2))
       .toDF("catalog_version", "table_name", "version")
@@ -324,11 +322,8 @@ object CrossTableMv {
       else requireCatFresh(spark)
       pinned(v) = spark.table(XmMv).localCheckpoint()
     }
-    val res = new Array[(Int, Long, Long, Double, Boolean)](3)
-    Scale.inParallel((1 to 3).map { v => () =>
-      res(v - 1) = summaryOf(v, pinned(v))
-    }: _*)
-    res.toSeq.toDF("cat_version", "n_keys", "n_items", "revenue",
+    Scale.inParallel((1 to 3).map(v => () => summaryOf(v, pinned(v))): _*)
+      .toDF("cat_version", "n_keys", "n_items", "revenue",
         "matches_recompute")
       .orderBy(col("cat_version"))
   }

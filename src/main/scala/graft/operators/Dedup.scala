@@ -2034,14 +2034,11 @@ object Dedup {
     // (downweight's labels) and q209's pipeline (its own CC over the
     // dedup survivors) — are data-independent: build them as one
     // concurrent wave (guide §2.6) instead of serial action trains
-    var labelsV: DataFrame = null
-    var attritionBase: DataFrame = null
-    Scale.inParallel(
-      () => labelsV = connectedComponents(
+    val Seq(labels, attritionBase) = Scale.inParallel(
+      () => connectedComponents(
         minhashPairs(docs).select(col("doc_a"), col("doc_b")))
         .select(col("id").as("doc_id"), col("label")),
-      () => attritionBase = q209CurationPipeline(spark, dir))
-    val labels = labelsV
+      () => q209CurationPipeline(spark, dir))
     val attrition = attritionBase.select(
       lit("attrition").as("section"),
       col("stage").cast("long").as("seq"), col("gate").as("key"),

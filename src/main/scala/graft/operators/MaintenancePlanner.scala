@@ -89,12 +89,11 @@ object MaintenancePlanner {
     // counts job) at CONSTRUCTION — independent, so build them as a
     // concurrent wave; the delete ledger is independent of the data
     // chain and overlaps it too (guide §2.6, r16)
-    val cuts = new Array[DataFrame](4)
-    Scale.inParallel(
-      () => cuts(0) = cut(0, small, byKey),
-      () => cuts(1) = cut(1, rpf, byKey),
-      () => cuts(2) = cut(2, rpf, byHash),
-      () => cuts(3) = cut(3, rpf, byKey))
+    val cuts = Scale.inParallel(
+      () => cut(0, small, byKey),
+      () => cut(1, rpf, byKey),
+      () => cut(2, rpf, byHash),
+      () => cut(3, rpf, byKey))
     Scale.inParallel(
       () => {
         cuts.reduce(_ unionByName _)
@@ -134,12 +133,9 @@ object MaintenancePlanner {
     // ONE manifest aggregate serves hi AND rpf (r16: was two separate
     // collects over the same table), and the independent delete-ledger
     // collect overlaps it (guide §2.6) — 2 driver rounds → 1
-    @volatile var hiRpf: org.apache.spark.sql.Row = null
-    @volatile var delRows: Array[org.apache.spark.sql.Row] = null
-    Scale.inParallel(
-      () => hiRpf = mf.agg(max(col("max_k")), sum(col("n_rows")))
-        .collect().head,
-      () => delRows = spark.table(MpDeletes)
+    val (hiRpf, delRows) = Scale.both(
+      () => mf.agg(max(col("max_k")), sum(col("n_rows"))).collect().head,
+      () => spark.table(MpDeletes)
         .groupBy(col("target_segment")).agg(count(lit(1)).as("n_del"))
         .collect())
     val hi = hiRpf.getLong(0) / 10
@@ -321,13 +317,11 @@ object MaintenancePlanner {
       // a ledger nothing mutates until the vacuum. Final table state
       // is byte-identical to the serial execution — oracle and
       // delivery certification hold unchanged.
-      val preps = new Array[(DataFrame, Seq[String])](work.size)
-      Scale.inParallel(work.zipWithIndex.map {
-        case ((seg, tag, fold), i) => () =>
-          preps(i) = rewriteSegmentPrep(spark, seg, rpf, tag, fold)
+      val preps = Scale.inParallel(work.map { case (seg, tag, fold) =>
+        () => rewriteSegmentPrep(spark, seg, rpf, tag, fold)
       }: _*)
       preps.foreach { case (recut, _) => recut.write.insertInto(MpData) }
-      val retired = preps.toSeq.flatMap(_._2)
+      val retired = preps.flatMap(_._2)
       Scale.dropPartitions(spark, MpData,
         retired.map(f => s"seg_file='$f'"))
       val keptM = spark.table(MpManifest)

@@ -41,29 +41,45 @@ object Scale {
   /** Run INDEPENDENT driver actions concurrently (guide §2.6: actions
     * are only sequential because driver code calls them sequentially —
     * concurrent jobs back-fill each other's stragglers and overlap
-    * each other's driver-side planning/commit time). Used by fixture
-    * builders whose steps have no data dependency (e.g. two tables'
-    * base writes). Spark sessions are thread-safe for job submission;
-    * callers must not toggle session-wide conf inside the bodies. The
-    * first failure is rethrown after all bodies finish, so error
-    * semantics match the sequential form; every other failure rides
-    * on it as a suppressed exception. */
-  private[graft] def inParallel(bodies: (() => Unit)*): Unit = {
+    * each other's driver-side planning/commit time). Returns the
+    * bodies' results in body order, whatever order they finish in.
+    *
+    * One thread per body, started from the caller's thread, ON
+    * PURPOSE: a new thread inherits the caller's Spark local
+    * properties as they are at the call — the phase tag that splits a
+    * job's build from its serve time, and the streaming and SQL
+    * properties inside a `foreachBatch` — where a reused pool thread
+    * would carry whatever its first user set. Spark sessions are
+    * thread-safe for job submission; callers must not toggle
+    * session-wide conf inside the bodies. The first failure is
+    * rethrown after all bodies finish, so error semantics match the
+    * sequential form; every other failure rides on it as a suppressed
+    * exception. */
+  private[graft] def inParallel[T](bodies: (() => T)*): IndexedSeq[T] = {
+    val results = new Array[Any](bodies.size)
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = bodies.map { b =>
+    val threads = bodies.zipWithIndex.map { case (b, i) =>
       val t = new Thread(() => {
-        try b() catch { case e: Throwable => errs.add(e) }
-      })
+        try results(i) = b() catch { case e: Throwable => errs.add(e) }
+      }, s"graft-wave-$i")
       t.setDaemon(true)
       t.start()
       t
     }
+    // join() orders every body's writes before the reads below
     threads.foreach(_.join())
     if (!errs.isEmpty) {
       val first = errs.poll()
       errs.forEach(first.addSuppressed(_))
       throw first
     }
+    results.toIndexedSeq.map(_.asInstanceOf[T])
+  }
+
+  /** [[inParallel]] for two bodies of different result types. */
+  private[graft] def both[A, B](a: () => A, b: () => B): (A, B) = {
+    val Seq(ra, rb) = inParallel[Any](a, b)
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 
   /** Co-located join via bucketing: both fact tables written bucketed

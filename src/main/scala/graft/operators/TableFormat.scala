@@ -699,13 +699,10 @@ object TableFormat {
       .filter(!col("zfile").isin(rewritten: _*))
     val keptB = spark.table(RmBloom)
       .filter(!col("zfile").isin(rewritten: _*))
-    var freshP: DataFrame = null
-    var keptMP: DataFrame = null
-    var keptBP: DataFrame = null
-    Scale.inParallel(
-      () => freshP = fresh.localCheckpoint(),
-      () => keptMP = keptM.localCheckpoint(),
-      () => keptBP = keptB.localCheckpoint())
+    val Seq(freshP, keptMP, keptBP) = Scale.inParallel(
+      () => fresh.localCheckpoint(),
+      () => keptM.localCheckpoint(),
+      () => keptB.localCheckpoint())
     Scale.inParallel(
       () => keptMP.unionByName(freshP.groupBy(col("zfile"))
           .agg(count(lit(1)).as("n_rows"),
@@ -722,35 +719,28 @@ object TableFormat {
       .agg(count(lit(1)).as("n_rows"),
         min(col("x")).as("min_x"), max(col("x")).as("max_x"),
         min(col("y")).as("min_y"), max(col("y")).as("max_y"))
-    var filesNew = 0L
-    var mMatch = false
-    var bMatch = false
-    Scale.inParallel(
-      () => filesNew =
-        spark.table(RmManifest).count() - (filesBefore - rewritten.size),
-      () => mMatch =
-        graft.Certs.sameMultiset(spark.table(RmManifest), rebuiltM),
-      () => bMatch = graft.Certs.sameMultiset(spark.table(RmBloom),
-        bloomRowsOf(spark.table(RmData), m)))
+    val Seq(filesNew: Long, mMatch: Boolean, bMatch: Boolean) =
+      Scale.inParallel[Any](
+        () => spark.table(RmManifest).count() -
+          (filesBefore - rewritten.size),
+        () => graft.Certs.sameMultiset(spark.table(RmManifest), rebuiltM),
+        () => graft.Certs.sameMultiset(spark.table(RmBloom),
+          bloomRowsOf(spark.table(RmData), m)))
 
     // probes over the MAINTAINED metadata
-    var boxFiles: Seq[Int] = Nil
-    var cands: Seq[Int] = Nil
-    Scale.inParallel(
-      () => boxFiles = overlappingFiles(spark.table(RmManifest), ZBox)
+    val Seq(boxFiles, cands) = Scale.inParallel(
+      () => overlappingFiles(spark.table(RmManifest), ZBox)
         .select(col("zfile")).collect().map(_.getInt(0)).toSeq.sorted,
-      () => cands = bloomCandidates(spark, RmBloom, BloomProbeKey, m))
+      () => bloomCandidates(spark, RmBloom, BloomProbeKey, m))
     val (xLo, xHi, yLo, yHi) = ZBox
-    var box: org.apache.spark.sql.Row = null
-    var key: org.apache.spark.sql.Row = null
-    Scale.inParallel(
-      () => box = spark.table(RmData)
+    val Seq(box, key) = Scale.inParallel(
+      () => spark.table(RmData)
         .filter(col("zfile").isin(boxFiles: _*))
         .filter(col("x") >= xLo && col("x") <= xHi &&
           col("y") >= yLo && col("y") <= yHi)
         .agg(count(lit(1)).as("n"), dsum(col("p_retailprice")).as("s"))
         .collect().head,
-      () => key = spark.table(RmData).filter(col("zfile").isin(cands: _*))
+      () => spark.table(RmData).filter(col("zfile").isin(cands: _*))
         .filter(col("p_partkey") === BloomProbeKey)
         .agg(count(lit(1)).as("n"), dsum(col("p_retailprice")).as("s"))
         .collect().head)
@@ -3086,14 +3076,12 @@ object TableFormat {
       * dangling apart. Returns the two staged manifest versions. */
     def stagePair(mod: Int, shift: Long, tag: String,
         corruptB: Boolean): (Int, Int) = {
-      var aV = 0
-      var bV = 0
       // the two table stagings are disjoint-table work — overlap them
-      Scale.inParallel(
+      val Seq(aV, bV) = Scale.inParallel(
         () => {
           stageCommit(spark, dir, XtAData, mod, shift, "2002-03-01",
             s"a_$tag")
-          aV = stageManifestVersion(spark, XtAManifest, s"a_$tag")
+          stageManifestVersion(spark, XtAManifest, s"a_$tag")
         },
         () => {
           val price = if (corruptB) -col("l_extendedprice")
@@ -3103,7 +3091,7 @@ object TableFormat {
             .select((col("l_orderkey") + shift).as("l_orderkey"),
               price.as("l_extendedprice"), lit(s"b_$tag").as("commit_id"))
             .write.insertInto(XtBData)
-          bV = stageManifestVersion(spark, XtBManifest, s"b_$tag")
+          stageManifestVersion(spark, XtBManifest, s"b_$tag")
         })
       (aV, bV)
     }

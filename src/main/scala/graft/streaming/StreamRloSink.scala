@@ -56,11 +56,10 @@ object StreamRloSink {
       // pinned blocks and are independent — overlap them (guide
       // §2.6, r16); writeStats still waits on BOTH (it needs the
       // stats row AND the written files' lengths)
-      @volatile var st: org.apache.spark.sql.Row = null
-      graft.operators.Scale.inParallel(
+      val (_, st) = graft.operators.Scale.both(
         () => rows.write.mode(SaveMode.Overwrite)
           .parquet(RloMeta.commitDir(root, s"b$k").toString),
-        () => st = rows.agg(min(unix_date(col("o_orderdate"))),
+        () => rows.agg(min(unix_date(col("o_orderdate"))),
           max(unix_date(col("o_orderdate"))), count(lit(1)),
           count(lit(1)) - count(col("o_orderdate")))
           .collect().head)

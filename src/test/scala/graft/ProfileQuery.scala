@@ -53,23 +53,33 @@ object ProfileQuery {
         }
     })
 
-    // driver stack sampler: every 20 ms grab the main thread's deepest
-    // "interesting" frame — the guide-§7.3 thread-dump loop, automated —
-    // so the driver-side gap time between jobs becomes attributable.
+    // driver stack sampler: every 20 ms grab the deepest "interesting"
+    // frame of the main thread and of every live concurrent-wave thread
+    // (`Scale.inParallel` names them graft-wave-<i>; while a wave runs
+    // the main thread only sits in Thread.join) — the guide-§7.3
+    // thread-dump loop, automated — so the driver-side gap time between
+    // jobs becomes attributable. Wave samples are marked `[wave]`.
     val mainThread = Thread.currentThread()
     val samples = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     @volatile var sampling = true
     val sampler = new Thread(() => {
       while (sampling) {
-        val st = mainThread.getStackTrace
-        val frame = st.find { f =>
-          val c = f.getClassName
-          (c.startsWith("org.apache.spark") || c.startsWith("graft")) &&
-            !c.contains("ProfileQuery")
-        }.map(f => s"${f.getClassName}.${f.getMethodName}")
-          .getOrElse(if (st.isEmpty) "idle" else
-            s"${st.head.getClassName}.${st.head.getMethodName}")
-        samples.merge(frame, 1, (a: Integer, b: Integer) => a + b)
+        // wave threads start from the main thread, so they join its group
+        val live = new Array[Thread](mainThread.getThreadGroup.activeCount + 16)
+        val waves = live.take(mainThread.getThreadGroup.enumerate(live))
+          .filter(_.getName.startsWith("graft-wave-"))
+        (("" -> mainThread.getStackTrace) +:
+            waves.toSeq.map(t => "[wave] " -> t.getStackTrace)).foreach {
+          case (mark, st) =>
+            val frame = st.find { f =>
+              val c = f.getClassName
+              (c.startsWith("org.apache.spark") || c.startsWith("graft")) &&
+                !c.contains("ProfileQuery")
+            }.map(f => s"${f.getClassName}.${f.getMethodName}")
+              .getOrElse(if (st.isEmpty) "idle" else
+                s"${st.head.getClassName}.${st.head.getMethodName}")
+            samples.merge(mark + frame, 1, (a: Integer, b: Integer) => a + b)
+        }
         Thread.sleep(20)
       }
     })
@@ -102,9 +112,9 @@ object ProfileQuery {
           f"shuffle-w ${st.shuffleWriteBytes}%10d B in ${st.inputRows}%9d rows" +
           s"  ${st.name}")
       }
-      println("--- driver main-thread stack samples (20 ms) ---")
+      println("--- driver stack samples (20 ms), main and wave threads ---")
       import scala.jdk.CollectionConverters._
-      samples.asScala.toSeq.sortBy(-_._2).take(8).foreach { case (f, n) =>
+      samples.asScala.toSeq.sortBy(-_._2).take(12).foreach { case (f, n) =>
         println(f"  ${n.toInt * 0.02}%7.2f s  $f")
       }
     }

@@ -58,6 +58,30 @@ class RelationalSpec extends AnyFunSuite {
     assert(offending.isEmpty, offending.mkString("\n"))
   }
 
+  test("src/main starts threads only in Scale's wave, and no wave " +
+      "hands its results out through a volatile variable") {
+    val main = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(main))
+    val volatileVar = """@volatile\s+(private(\[\w+\])?\s+)?var\b""".r
+    def linesWith(hit: String => Boolean): List[(String, String)] =
+      scala.util.Using.resource(java.nio.file.Files.walk(main))(
+        _.iterator().asScala
+          .filter(_.toString.endsWith(".scala"))
+          .flatMap { p =>
+            java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+              .collect { case (l, i) if hit(l) => p.getFileName.toString ->
+                s"${p.getFileName}:${i + 1}: ${l.trim}" }
+          }.toList)
+    val threads = linesWith(_.contains("new Thread("))
+    assert(threads.map(_._1) == List("Scale.scala"),
+      threads.map(_._2).mkString("\n"))
+    // the only volatile fields are RloCatalog's runtime-filter keep set
+    // and its row-level operation's configured scan
+    val volatiles = linesWith(volatileVar.findFirstIn(_).isDefined)
+    assert(volatiles.map(_._1) == List("RloCatalog.scala", "RloCatalog.scala"),
+      volatiles.map(_._2).mkString("\n"))
+  }
+
   test("Tables.table infers a file's schema once per (file version, " +
       "schema settings); a memoized open starts no Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}

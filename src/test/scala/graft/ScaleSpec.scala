@@ -21,6 +21,36 @@ class ScaleSpec extends AnyFunSuite {
       Set("a", "b"))
   }
 
+  test("inParallel returns results in body order, not finishing order") {
+    // body i waits for body i + 1 to finish, so they finish 2, 1, 0
+    val done = Seq.fill(3)(new java.util.concurrent.CountDownLatch(1))
+    val finished = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val results = Scale.inParallel((0 until 3).map { i => () =>
+      if (i < 2) done(i + 1).await(30, java.util.concurrent.TimeUnit.SECONDS)
+      finished.add(i)
+      done(i).countDown()
+      s"r$i"
+    }: _*)
+    assert(results == IndexedSeq("r0", "r1", "r2"))
+    assert(finished.toArray.toSeq == Seq(2, 1, 0))
+  }
+
+  test("every wave body sees the caller's Spark local properties as " +
+      "they are at the call") {
+    val sc = spark.sparkContext
+    val key = "graft.test.wave"
+    def wave(): IndexedSeq[String] =
+      Scale.inParallel((1 to 4).map(_ => () => sc.getLocalProperty(key)): _*)
+    try {
+      sc.setLocalProperty(key, "first")
+      val first = wave()
+      sc.setLocalProperty(key, "second")
+      val second = wave()
+      assert(first == IndexedSeq.fill(4)("first"))
+      assert(second == IndexedSeq.fill(4)("second"))
+    } finally sc.setLocalProperty(key, null)
+  }
+
   test("partition audit answers counts from parquet footers, not a " +
       "data scan") {
     val plan = operators.Egress.q187PartitionAudit(spark, sf)
