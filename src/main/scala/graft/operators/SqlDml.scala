@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -80,7 +79,7 @@ object SqlDml {
   private[graft] def buildTable(spark: SparkSession, dir: String,
       table: String, mode: String = "cow"): String = {
     ensureCatalog(spark)
-    val conf = new Configuration()
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = tableRoot(table)
     RloMeta.initTable(conf, root, FixtureSchema, "o_orderdate")
     if (mode != "cow") RloMeta.setMode(conf, root, mode)
@@ -565,7 +564,7 @@ object SqlDml {
   private[graft] def buildStringTable(spark: SparkSession, dir: String,
       table: String): String = {
     ensureCatalog(spark)
-    val conf = new Configuration()
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = tableRoot(table)
     val schema = StructType(FixtureSchema.fields :+
       StructField("o_source", StringType))
@@ -694,7 +693,7 @@ object SqlDml {
     * need, now first-class in the connector. */
   def q370NestedWideDml(spark: SparkSession, dir: String): DataFrame = {
     ensureCatalog(spark)
-    val conf = new Configuration()
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = tableRoot("orders_nested")
     val schema = StructType(Seq(
       StructField("o_orderkey", LongType, nullable = false),
@@ -809,7 +808,7 @@ object SqlDml {
   private[graft] def buildKeyTable(spark: SparkSession, dir: String,
       table: String): (String, Long, Long) = {
     ensureCatalog(spark)
-    val conf = new Configuration()
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = tableRoot(table)
     RloMeta.initTable(conf, root, FixtureSchema, "o_orderdate")
     val orders = ordersAsDate(spark, dir)

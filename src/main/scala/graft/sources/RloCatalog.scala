@@ -77,7 +77,7 @@ class GraftRloCatalog extends TableCatalog with SupportsNamespaces
 
   private var catalogName: String = _
   private var base: String = _
-  private def conf = new Configuration()
+  private def conf = RloMeta.sessionConf
 
   override def initialize(name: String,
       options: CaseInsensitiveStringMap): Unit = {
@@ -385,7 +385,8 @@ class GraftRloCatalog extends TableCatalog with SupportsNamespaces
       metadata: util.Map[String, String]): Unit = {
     val p = new org.apache.hadoop.fs.Path(
       (base +: namespace.toSeq).mkString("/"))
-    RloMeta.fs(conf, p).mkdirs(p); ()
+    val f = RloMeta.fs(conf, p)
+    LocalFileCommit.mkdirs(f.makeQualified(p))(f.mkdirs(p))
   }
 
   override def alterNamespace(namespace: Array[String],
@@ -425,7 +426,7 @@ class StagedRloTable(stagedRoot: String, finalRoot: String,
     baseVersion: Int = 0)
     extends GraftRloTable(stagedRoot, ident, None) with StagedTable {
 
-  @transient private lazy val sconf = new Configuration()
+  @transient private lazy val sconf = RloMeta.sessionConf
 
   override def commitStagedChanges(): Unit =
     if (replace) commitReplace() else commitCreate()
@@ -549,7 +550,7 @@ class GraftRloTable(val root: String, ident: String,
     with SupportsRowLevelOperations with SupportsMetadataColumns
     with SupportsDelete {
 
-  @transient private lazy val conf = new Configuration()
+  @transient private lazy val conf = RloMeta.sessionConf
   lazy val tableSchema: StructType = RloMeta.readSchema(conf, root)
   lazy val statsColName: String = RloMeta.statsCol(conf, root)
   /** "cow" (ReplaceData) or "mor" (SupportsDelta + read-time
@@ -595,7 +596,7 @@ class GraftRloTable(val root: String, ident: String,
           () =>
             if (!all) Set.empty
             else {
-              val c = new Configuration()
+              val c = RloMeta.sessionConf
               RloMeta.commitsOf(c, tableRoot,
                 RloMeta.headVersion(c, tableRoot))._2.toSet
             },
@@ -624,7 +625,7 @@ class GraftRloTable(val root: String, ident: String,
     * None when any segment would need a row-level rewrite. */
   private def metadataDeleteSplit(filters: Array[org.apache.spark.sql
       .sources.Filter]): Option[(Seq[String], Seq[String], Int)] = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val head = RloMeta.headVersion(conf, root)
     val live = RloMeta.commitsOf(conf, root, head)._2
     val split = live.map { c =>
@@ -650,7 +651,7 @@ class GraftRloTable(val root: String, ident: String,
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val (dropped, kept, head) = metadataDeleteSplit(filters)
       .getOrElse(throw new IllegalStateException(
         "deleteWhere beyond canDeleteWhere's promise - a segment " +
@@ -676,7 +677,7 @@ class RloScanBuilder(table: GraftRloTable, onBuild: RloScan => Unit,
     with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
 
-  @transient private val conf = new Configuration()
+  @transient private val conf = RloMeta.sessionConf
   private var pushed: Array[sources.Filter] = Array.empty
   private var allPushed: Array[sources.Filter] = Array.empty
   private var required: StructType = table.tableSchema
@@ -1078,7 +1079,7 @@ class RloScan(root: String, requiredSchema: StructType,
   private def statsOf(c: String): RloMeta.SegStats =
     segStats.getOrElse(c, RloMeta.segStats(conf, root, c))
 
-  @transient private lazy val conf = new Configuration()
+  @transient private lazy val conf = RloMeta.sessionConf
   @volatile private var runtimeKeep: Option[Set[String]] = None
 
   /** The groups this scan reads — static stats routing further
@@ -1849,7 +1850,7 @@ class RloWrite(root: String, writeSchema: StructType,
   override def description(): String = s"graft-rlo write $root"
 
   override def toBatch: BatchWrite = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val head = RloMeta.headVersion(conf, root)
     val newCommit = s"w${head + 1}-${RloNames.attemptId()}"
     val statsIdx = writeSchema.fieldIndex(statsColName)
@@ -1938,7 +1939,7 @@ class RloBatchWrite(root: String, schemaJson: String, statsIdx: Int,
       targetFileBytes)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val ms = messages.collect { case m: RloCommitMessage => m }
     val folded = RloCommitMessage.fold(ms.toSeq)
     val n = folded.n
@@ -1976,7 +1977,7 @@ class RloBatchWrite(root: String, schemaJson: String, statsIdx: Int,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    RloMeta.deleteCommitDir(new Configuration(), root, newCommit)
+    RloMeta.deleteCommitDir(RloMeta.sessionConf, root, newCommit)
 }
 
 case class RloWriterFactory(root: String, commit: String,
@@ -2189,7 +2190,7 @@ class RloDeltaWrite(root: String, info: LogicalWriteInfo,
     statsColName: String) extends DeltaWrite {
   override def description(): String = s"graft-rlo-mor write $root"
   override def toBatch: DeltaBatchWrite = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val head = RloMeta.headVersion(conf, root)
     // attempt-unique names: racing delta writers never share a data
     // or artifact directory (r13 review — see RloWrite)
@@ -2223,7 +2224,7 @@ class RloDeltaBatchWrite(root: String, rowSchemaJson: String,
       statsIdx, partIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val ms = messages.collect { case m: RloDeltaCommitMessage => m }
     val folded = RloCommitMessage.fold(ms.map(_.data).toSeq)
     val nIns = folded.n
@@ -2251,7 +2252,7 @@ class RloDeltaBatchWrite(root: String, rowSchemaJson: String,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     // attempt-scoped cleanup: these names are unique to THIS attempt
     RloMeta.deleteCommitDir(conf, root, newCommit)
     val db = RloMeta.deleteBatchDir(root, newDbatch)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +38,7 @@ object RloChanges {
     * root (for the manifest diff). */
   def tableChanges(spark: SparkSession, sqlTable: String, root: String,
       fromV: Int, toV: Int): DataFrame = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     require(fromV < toV, s"need fromV < toV, got $fromV..$toV")
     val schema = RloMeta.readSchema(conf, root)
     val keyCol = schema.head.name

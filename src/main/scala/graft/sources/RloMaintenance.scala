@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -75,7 +74,7 @@ object RloProcedures {
       StructType(Seq(StructField("reclaimed", StringType),
         StructField("kind", StringType)))) {
       override def run(input: InternalRow): Seq[InternalRow] = {
-        val conf = new Configuration()
+        val conf = RloMeta.sessionConf
         val root = rootOf(input.getUTF8String(0).toString)
         val head = RloMeta.headVersion(conf, root)
         val (segs, batches) = RloMeta.expireAndVacuum(conf, root, head)
@@ -96,7 +95,7 @@ object RloProcedures {
       StructType(Seq(StructField("reclaimed", StringType),
         StructField("kind", StringType)))) {
       override def run(input: InternalRow): Seq[InternalRow] = {
-        val conf = new Configuration()
+        val conf = RloMeta.sessionConf
         val root = rootOf(input.getUTF8String(0).toString)
         val (segs, batches) = RloMeta.sweepOrphans(conf, root,
           input.getLong(1) * 1000L)
@@ -216,7 +215,7 @@ object RloMaintenance {
     * Ranked by benefit descending (ties: action, then target). An
     * empty plan is the healthy-table answer, not an error. */
   def planMaintenance(root: String): Seq[PlanItem] = {
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val head = RloMeta.headVersion(conf, root)
     val live = RloMeta.commitsOf(conf, root, head)._2
     val batches = RloMeta.deletesOf(conf, root, head)
@@ -264,7 +263,7 @@ object RloMaintenance {
     * and pruning all participate. */
   def optimize(root: String, sqlName: String): OptimizeResult = {
     val spark = SparkSession.active
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     val head = RloMeta.headVersion(conf, root)
     val live = RloMeta.commitsOf(conf, root, head)._2
     val statsCol = RloMeta.statsCol(conf, root)
@@ -340,7 +339,7 @@ object RloMaintenance {
   def compactDeletes(root: String, sqlName: String,
       threshold: Double): Seq[(String, String, Long, Long)] = {
     val spark = SparkSession.active
-    val conf = new Configuration()
+    val conf = RloMeta.sessionConf
     require(RloMeta.mode(conf, root) == "mor",
       "compact_deletes applies to merge-on-read tables")
     val head = RloMeta.headVersion(conf, root)

@@ -6,6 +6,7 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -48,6 +49,14 @@ object RloMeta {
     * failed every catalog operation on an object-store root). */
   def fs(conf: Configuration, p: Path): FileSystem = p.getFileSystem(conf)
 
+  /** The active session's Hadoop config, loaded once and carrying the
+    * session's `spark.hadoop.*` settings (an s3a root's endpoint and
+    * credentials). A freshly constructed config has neither: it
+    * re-parses `core-default.xml` (7.7 ms on a 4-core host) when it
+    * resolves a FileSystem. Driver side only: tasks build their own. */
+  def sessionConf: Configuration =
+    SparkSession.active.sparkContext.hadoopConfiguration
+
   private def fsOf(conf: Configuration, p: Path): FileSystem =
     p.getFileSystem(conf)
 
@@ -67,11 +76,25 @@ object RloMeta {
     } finally in.close()
   }
 
+  /** Write `text` to `p`, replacing it or, without `overwrite`,
+    * create-if-absent (false when `p` exists). On `file://` through
+    * [[LocalFileCommit]], which spawns no subprocess. */
   private def writeText(fs: FileSystem, p: Path, text: String,
-      overwrite: Boolean): Unit = {
-    val out = fs.create(p, overwrite)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      overwrite: Boolean): Boolean = {
+    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    LocalFileCommit.localPath(fs.makeQualified(p)) match {
+      case Some(local) => LocalFileCommit.write(local, bytes, overwrite)
+      case None =>
+        try {
+          val out = fs.create(p, overwrite)
+          try out.write(bytes) finally out.close()
+          true
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException
+              if !overwrite => false
+          case _: java.io.IOException if !overwrite && fs.exists(p) => false
+        }
+    }
   }
 
   // ------------------------------------------------ table metadata
@@ -86,8 +109,8 @@ object RloMeta {
     RloTableCache.invalidate(root)
     val f = fsOf(conf, new Path(root))
     f.delete(new Path(root), true)
-    f.mkdirs(metaDir(root))
-    f.mkdirs(dataDir(root))
+    for (d <- Seq(metaDir(root), dataDir(root)))
+      LocalFileCommit.mkdirs(f.makeQualified(d))(f.mkdirs(d))
     writeText(f, new Path(metaDir(root), "schema.ddl"), schema.toDDL,
       overwrite = true)
     writeText(f, new Path(metaDir(root), "statscol.txt"), statsCol,
@@ -326,10 +349,10 @@ object RloMeta {
     *
     * Atomicity source per scheme: on `file://` the Hadoop local FS's
     * `create(overwrite = false)` is CHECK-then-create (a real race
-    * window between two OS processes), so the local path goes through
-    * POSIX `O_CREAT|O_EXCL` (`Files.createFile` via CREATE_NEW) —
-    * kernel-atomic across processes, which SqlDmlSpec exercises with
-    * two racing JVMs. Remote stores keep the FileSystem call: HDFS
+    * window between two OS processes), so the local path hard-links
+    * a written temp into place ([[LocalFileCommit]]) — kernel-atomic
+    * across processes, which SqlDmlSpec exercises with two racing
+    * JVMs. Remote stores keep the FileSystem call: HDFS
     * create-no-overwrite is namenode-atomic, and object stores
     * provide conditional create (S3 If-None-Match) under the same
     * contract. */
@@ -342,34 +365,17 @@ object RloMeta {
   }
 
   /** Create-if-absent publish of one metadata file — the commit
-    * primitive shared by version manifests and schema generations. */
+    * primitive shared by version manifests and schema generations.
+    * On `file://` it links a fully written temp into place
+    * ([[LocalFileCommit]]): kernel-atomic across processes, where the
+    * Hadoop local FS's `create(overwrite = false)` is check-then-create,
+    * and free of the `chmod` subprocesses Hadoop spawns per file. */
   private[sources] def casCreate(conf: Configuration, p: Path,
-      text: String): Boolean = {
-    // decide locality from the PATH's own filesystem, never the
+      text: String): Boolean =
+    // locality comes from the PATH's own filesystem, never the
     // default FS (an s3a root on a file-default host must take the
     // remote branch - r13 review)
-    val pfs = fsOf(conf, p)
-    val isLocal = pfs.getScheme == "file"
-    if (isLocal) {
-      try {
-        val local = java.nio.file.Paths.get(
-          new Path(pfs.makeQualified(p).toUri.getPath).toString)
-        java.nio.file.Files.write(local,
-          text.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
-      try { writeText(pfs, p, text, overwrite = false); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.io.IOException if pfs.exists(p) => false
-      }
-    }
-  }
+    writeText(fsOf(conf, p), p, text, overwrite = false)
 
   // ---------------------------------------------------- segment stats
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 
@@ -31,7 +30,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 class RloMicroBatchStream(root: String, outJson: String,
     keyCol: String) extends MicroBatchStream {
 
-  private def conf = new Configuration()
+  private def conf = RloMeta.sessionConf
 
   override def initialOffset(): Offset = RloVersionOffset(0)
 

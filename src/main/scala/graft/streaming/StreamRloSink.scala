@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -37,7 +36,7 @@ object StreamRloSink {
     * drains (first run and the fresh-checkpoint replay). */
   private def applyBatch(root: String)(batch: DataFrame,
       unused: Long): Unit = {
-    val conf = new Configuration()
+    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
     // driver-side distinct (r16): .distinct() planned a shuffle stage
     // per trigger for one small file's tick column — and the replay
     // drain pays it again on every re-delivered batch
@@ -78,7 +77,7 @@ object StreamRloSink {
   def q358StreamRloSink(spark: SparkSession, dir: String): DataFrame =
     StreamingWindows.withStreamPartitions(spark) {
       SqlDml.ensureCatalog(spark)
-      val conf = new Configuration()
+      val conf = spark.sparkContext.hadoopConfiguration
       val root = SqlDml.tableRoot("orders_stream")
       RloMeta.initTable(conf, root, SqlDml.FixtureSchema, "o_orderdate")
       RloMeta.publishVersion(conf, root, 1,

@@ -35,18 +35,33 @@ object StreamingWindows {
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
 
-  /** Run `body` with a reduced shuffle-partition count and restore the
-    * previous value after. Stateful streaming keeps one state store
-    * per shuffle partition per stateful operator; for the bounded
-    * drains here, 8 stores load/commit faster than 32 and the query
-    * result is partitioning-independent. Unbounded production streams
-    * size this to (cores × state volume), not query latency. */
+  /** The scope graft's catalog streams start in: run `body` with a
+    * reduced shuffle-partition count and with
+    * [[LocalCheckpointFileManager]] as the checkpoint file manager, and
+    * restore both settings after.
+    *
+    * Stateful streaming keeps one state store per shuffle partition
+    * per stateful operator; for the bounded drains here, 8 stores
+    * load/commit faster than 32 and the query result is
+    * partitioning-independent. Unbounded production streams size this
+    * to (cores × state volume), not query latency.
+    *
+    * A stream reads the checkpoint manager class when it starts (its
+    * offset and commit logs) and carries it in its cloned session (its
+    * state stores), so setting it here reaches every stream started in
+    * `body`, and no stream outside it. */
   private[graft] def withStreamPartitions[T](spark: SparkSession)(
       body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    try body finally spark.conf.set(key, old)
+    val settings = Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[LocalCheckpointFileManager].getName)
+    val old = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Stage single-file arrivals for a file-source drain: each

@@ -58,28 +58,43 @@ class RelationalSpec extends AnyFunSuite {
     assert(offending.isEmpty, offending.mkString("\n"))
   }
 
-  test("src/main starts threads only in Scale's wave, and no wave " +
-      "hands its results out through a volatile variable") {
+  /** (file name, "file:line: text") of every src/main line `hit` accepts. */
+  private def mainLinesWith(hit: String => Boolean): List[(String, String)] = {
     val main = java.nio.file.Paths.get("src/main")
     assert(java.nio.file.Files.isDirectory(main))
+    scala.util.Using.resource(java.nio.file.Files.walk(main))(
+      _.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+            .collect { case (l, i) if hit(l) => p.getFileName.toString ->
+              s"${p.getFileName}:${i + 1}: ${l.trim}" }
+        }.toList)
+  }
+
+  test("src/main starts threads only in Scale's wave, and no wave " +
+      "hands its results out through a volatile variable") {
     val volatileVar = """@volatile\s+(private(\[\w+\])?\s+)?var\b""".r
-    def linesWith(hit: String => Boolean): List[(String, String)] =
-      scala.util.Using.resource(java.nio.file.Files.walk(main))(
-        _.iterator().asScala
-          .filter(_.toString.endsWith(".scala"))
-          .flatMap { p =>
-            java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
-              .collect { case (l, i) if hit(l) => p.getFileName.toString ->
-                s"${p.getFileName}:${i + 1}: ${l.trim}" }
-          }.toList)
-    val threads = linesWith(_.contains("new Thread("))
+    val threads = mainLinesWith(_.contains("new Thread("))
     assert(threads.map(_._1) == List("Scale.scala"),
       threads.map(_._2).mkString("\n"))
     // the only volatile fields are RloCatalog's runtime-filter keep set
     // and its row-level operation's configured scan
-    val volatiles = linesWith(volatileVar.findFirstIn(_).isDefined)
+    val volatiles = mainLinesWith(volatileVar.findFirstIn(_).isDefined)
     assert(volatiles.map(_._1) == List("RloCatalog.scala", "RloCatalog.scala"),
       volatiles.map(_._2).mkString("\n"))
+  }
+
+  test("src/main builds a fresh Hadoop config only at the four " +
+      "executor-side RLO sites; driver code reuses the session's") {
+    // a fresh config re-parses core-default.xml when first read (10-14
+    // ms) and misses the session's spark.hadoop.* settings. The task
+    // side keeps its own: RloColumnarReader.confFor, RloPartitionReader,
+    // RloDataWriter and RloDeltaWriter, in file order
+    val fresh = """new\s+(org\.apache\.hadoop\.conf\.)?Configuration\(\s*\)""".r
+    val sites = mainLinesWith(fresh.findFirstIn(_).isDefined)
+    assert(sites.map(_._1) == List.fill(4)("RloCatalog.scala"),
+      sites.map(_._2).mkString("\n"))
   }
 
   test("Tables.table infers a file's schema once per (file version, " +

@@ -118,6 +118,22 @@ class SqlDmlSpec extends AnyFunSuite {
     assert(display(v4 -- v3) == Set("w4"), s"DELETE appended ${v4 -- v3}")
   }
 
+  test("a version publish into a deleted table fails and does not " +
+      "recreate the table's metadata directory") {
+    val root = graft.Scratch.dir("rlo_dropped_cas")
+    RloMeta.initTable(conf, root,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k",
+          org.apache.spark.sql.types.LongType))), "k")
+    assert(RloMeta.publishVersion(conf, root, 1, 0L, Seq("base")))
+    val dir = java.nio.file.Paths.get(root)
+    graft.Scratch.deleteRecursively(dir) // a concurrent drop
+    intercept[java.nio.file.NoSuchFileException](
+      RloMeta.publishVersion(conf, root, 2, 0L, Seq("late")))
+    assert(!java.nio.file.Files.exists(dir),
+      "the losing publish rebuilt the dropped table's directory")
+  }
+
   test("the version-file publish is a CAS: the second publisher of " +
       "the same version loses cleanly with nothing visible") {
     val root = SqlDml.buildTable(spark, sf, "orders_cow_cas")

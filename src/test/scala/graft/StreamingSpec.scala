@@ -273,4 +273,94 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(stream == batch)
   }
+
+  private def checkpointManager(dir: String) =
+    new streaming.LocalCheckpointFileManager(
+      new org.apache.hadoop.fs.Path(dir), spark.sparkContext.hadoopConfiguration)
+
+  private def bytesOf(s: String) =
+    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  private def listing(dir: String): Set[String] =
+    new java.io.File(dir).list().toSet
+
+  test("checkpoint manager: create-if-absent on an existing entry " +
+      "fails with FileAlreadyExistsException and keeps the original") {
+    withTempDir("graft_ckfm_cas") { dir =>
+      val fm = checkpointManager(dir)
+      val p = new org.apache.hadoop.fs.Path(dir, "0")
+      val first = fm.createAtomic(p, overwriteIfPossible = false)
+      first.write(bytesOf("first"))
+      first.close()
+      val second = fm.createAtomic(p, overwriteIfPossible = false)
+      second.write(bytesOf("second entry"))
+      intercept[org.apache.hadoop.fs.FileAlreadyExistsException](
+        second.close())
+      second.cancel() // what HDFSMetadataLog does after a failed close
+      assert(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, "0"))) == "first")
+      assert(listing(dir) == Set("0"), "the loser's temp file must be gone")
+      // a winner written through Hadoop's checksummed FS keeps its .crc
+      val lfs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      val q = new org.apache.hadoop.fs.Path(dir, "1")
+      val winner = lfs.create(q, false)
+      winner.write(bytesOf("winner"))
+      winner.close()
+      val loser = fm.createAtomic(q, overwriteIfPossible = false)
+      loser.write(bytesOf("loser"))
+      intercept[org.apache.hadoop.fs.FileAlreadyExistsException](loser.close())
+      assert(listing(dir) == Set("0", "1", ".1.crc"), listing(dir).mkString(","))
+      val in = lfs.open(q)
+      try assert(new String(in.readAllBytes()) == "winner") finally in.close()
+    }
+  }
+
+  test("checkpoint manager: cancel() leaves no temp file behind") {
+    withTempDir("graft_ckfm_cancel") { dir =>
+      val fm = checkpointManager(dir)
+      val out = fm.createAtomic(new org.apache.hadoop.fs.Path(dir, "1"),
+        overwriteIfPossible = false)
+      out.write(bytesOf("half an entry"))
+      assert(listing(dir).size == 1, "the write goes to a temp file")
+      out.cancel()
+      assert(listing(dir).isEmpty, listing(dir).mkString(","))
+    }
+  }
+
+  test("checkpoint manager: an entry written through Hadoop's " +
+      "checksummed FS and then replaced reads back the new bytes") {
+    withTempDir("graft_ckfm_crc") { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir, "state.delta")
+      val lfs = org.apache.hadoop.fs.FileSystem.getLocal(
+        spark.sparkContext.hadoopConfiguration)
+      val old = lfs.create(p, true)
+      old.write(bytesOf("the old, longer entry"))
+      old.close()
+      assert(listing(dir).contains(".state.delta.crc"))
+      val fm = checkpointManager(dir)
+      val out = fm.createAtomic(p, overwriteIfPossible = true)
+      out.write(bytesOf("new"))
+      out.close()
+      // both readers verify a .crc sidecar when one exists: a stale one
+      // fails the read with a ChecksumException
+      def read(in: java.io.InputStream) =
+        try new String(in.readAllBytes()) finally in.close()
+      assert(read(lfs.open(p)) == "new")
+      assert(read(fm.open(p)) == "new")
+      assert(listing(dir) == Set("state.delta"))
+    }
+  }
+
+  test("graft-started streams write their checkpoints through the " +
+      "local checkpoint manager: q358's offsets log holds no .crc") {
+    streaming.StreamRloSink.q358StreamRloSink(spark, sf).collect()
+    val offsets = Scratch.dir("q358_arrivals") + "/_cp1/offsets"
+    val names = listing(offsets)
+    assert(names.contains("0"), names.mkString(","))
+    assert(!names.exists(_.endsWith(".crc")), names.mkString(","))
+    // the scope restores the session's manager setting afterwards
+    assert(spark.conf.getOption(
+      "spark.sql.streaming.checkpointFileManagerClass").isEmpty)
+  }
 }
